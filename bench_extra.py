@@ -233,6 +233,7 @@ def sched_stages(cores: int) -> dict:
                 policy.select(
                     "host", "disallow", "allow", "crawl_delay_ms",
                     "budget_per_round",
+                    frontier_mod._policy_has_wild().alias("_has_wild"),
                 )
             ),
             "host",

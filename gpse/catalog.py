@@ -1,12 +1,11 @@
 """Iceberg-semantics table catalog over Parquet (SURVEY.md §7.2).
 
-The sandbox has no Iceberg runtime jar and no network to fetch one, so this
-layer reproduces the Iceberg semantics the north_star depends on — atomic
-snapshot commits, a manifest log, time-travel by crawl round, and
-append-vs-overwrite table evolution — over plain Parquet directories. On a
-real cluster the same interface maps 1:1 onto
-``spark.read.format("iceberg")`` + ``VERSION AS OF`` / ``snapshot-id``
-(catalog conf switch); nothing above this module knows the difference.
+This layer reproduces the Iceberg semantics the north_star depends on —
+atomic snapshot commits, a manifest log, time-travel by crawl round, and
+append-vs-overwrite table evolution — over plain Parquet directories, so it
+needs no Iceberg runtime jar. Each operation maps 1:1 onto an Iceberg call
+(the table in SCALE.md). No second backend ships: without the jar it could
+be neither run nor tested.
 
 Layout:
     base/_manifest.jsonl            -- the snapshot log (small, driver-side)
@@ -198,204 +197,6 @@ class Catalog:
         return [s.__dict__ for s in self._read_manifest() if name is None or s.table == name]
 
 
-class IcebergCatalog:
-    """Real Apache Iceberg backend behind the same interface as `Catalog`
-    (commit / load / load_delta / prune / exists / latest_round /
-    snapshots), so the crawl loop swaps storage layers by constructor.
-
-    Requires a Spark session configured with an Iceberg catalog, e.g.::
-
-        spark-submit \\
-          --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0 \\
-          --conf spark.sql.catalog.gpse=org.apache.iceberg.spark.SparkCatalog \\
-          --conf spark.sql.catalog.gpse.type=hadoop \\
-          --conf spark.sql.catalog.gpse.warehouse=hdfs://…/warehouse
-
-    The sandbox has neither the runtime jar nor network to fetch it
-    (SURVEY.md §0), so this class is exercised only when GPSE_ICEBERG=1
-    (tests/unit/test_catalog.py skips otherwise); the parquet `Catalog`
-    reproduces the same semantics offline.
-
-    Round ↔ snapshot mapping: every commit stamps its Iceberg snapshot
-    with a ``gpse-round`` snapshot property (write option
-    ``snapshot-property.gpse-round``). ``load(round=R)`` resolves the
-    newest snapshot whose property ≤ R from the ``<table>.snapshots``
-    metadata table and time-travels with ``snapshot-id``; ``load_delta``
-    is Iceberg's incremental read between a snapshot and its parent;
-    ``prune`` is ``rollback_to_snapshot``.
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str = "gpse", namespace: str = "crawl") -> None:
-        self.spark = spark
-        self.cat = catalog
-        self.ns = namespace
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
-
-    def _tbl(self, name: str) -> str:
-        return f"{self.cat}.{self.ns}.{name}"
-
-    def _snaps(self, name: str) -> list[dict]:
-        """Snapshot log of `name`, RESTRICTED to ancestors of the current
-        main-branch head. The `<table>.snapshots` metadata table keeps
-        rolled-back snapshots listed until expire_snapshots, so after a
-        `prune` (rollback_to_snapshot) the raw table would still resolve
-        the dropped rounds and silently break crash recovery (ADVICE r02).
-        Walking the parent_id chain from the head makes rolled-back
-        snapshots invisible, matching the parquet Catalog's manifest
-        semantics."""
-        rows = self.spark.sql(
-            f"SELECT snapshot_id, parent_id, committed_at, operation, "
-            f"summary['gpse-round'] AS r FROM {self._tbl(name)}.snapshots "
-            f"ORDER BY committed_at"
-        ).collect()
-        by_id = {str(x.snapshot_id): x for x in rows}
-        head_rows = self.spark.sql(
-            f"SELECT snapshot_id FROM {self._tbl(name)}.refs WHERE name = 'main'"
-        ).collect()
-        if head_rows:
-            ancestors: set[str] = set()
-            cur = str(head_rows[0].snapshot_id)
-            while cur is not None and cur in by_id and cur not in ancestors:
-                ancestors.add(cur)
-                p = by_id[cur].parent_id
-                cur = None if p is None else str(p)
-            rows = [x for x in rows if str(x.snapshot_id) in ancestors]
-        out: list[dict] = []
-        rounds: dict[str, int] = {}
-        for x in rows:
-            sid = str(x.snapshot_id)
-            pid = None if x.parent_id is None else str(x.parent_id)
-            if x.r is not None:
-                rnd = int(x.r)
-            else:
-                # maintenance snapshot (rewrite_data_files 'replace' etc.):
-                # same logical rows as its parent → inherit the round, and
-                # flag it so load_delta skips it (the parquet Catalog's
-                # `compaction` tag, mirrored)
-                rnd = rounds.get(pid, -1) if pid else -1
-            rounds[sid] = rnd
-            out.append(
-                {
-                    "table": name,
-                    "round": rnd,
-                    "snapshot_id": sid,
-                    "parent_id": pid,
-                    "committed_ts": x.committed_at.timestamp(),
-                    "compaction": x.r is None,
-                }
-            )
-        return out
-
-    # ---- public API (mirrors Catalog) ---------------------------------
-    def commit(self, name: str, df: DataFrame, round: int, mode: str = "overwrite") -> str:
-        t = self._tbl(name)
-        w = df.writeTo(t).option("snapshot-property.gpse-round", str(round))
-        if not self.spark.catalog.tableExists(t):
-            w.using("iceberg").create()
-        elif mode == "overwrite":
-            w.replace()
-        else:
-            w.append()
-        return self._snaps(name)[-1]["snapshot_id"]
-
-    def load(self, spark: SparkSession, name: str, round: int | None = None) -> DataFrame:
-        t = self._tbl(name)
-        if not spark.catalog.tableExists(t):
-            raise KeyError(f"no snapshot for table {name!r}")
-        if round is None:
-            return spark.read.table(t)
-        cand = [s for s in self._snaps(name) if s["round"] <= round]
-        if not cand:
-            raise KeyError(f"no snapshot for table {name!r} at round {round!r}")
-        return spark.read.option("snapshot-id", cand[-1]["snapshot_id"]).table(t)
-
-    def load_delta(self, spark: SparkSession, name: str, round: int) -> DataFrame:
-        cand = [
-            s for s in self._snaps(name)
-            if s["round"] == round and not s.get("compaction")
-        ]
-        if not cand:
-            raise KeyError(f"no delta commit for table {name!r} at round {round}")
-        s = cand[-1]
-        r = spark.read.format("iceberg").option("end-snapshot-id", s["snapshot_id"])
-        if s["parent_id"] is not None:
-            r = r.option("start-snapshot-id", s["parent_id"])  # exclusive
-        return r.load(self._tbl(name))
-
-    def prune(self, keep) -> int:
-        """Roll every table back to its newest snapshot satisfying
-        ``keep({table, round})`` (crash-recovery rollback, like
-        Catalog.prune). Tables whose snapshots are all dropped are
-        deleted."""
-        from types import SimpleNamespace
-
-        dropped = 0
-        tables = [
-            r.tableName
-            for r in self.spark.sql(f"SHOW TABLES IN {self.cat}.{self.ns}").collect()
-        ]
-        for name in tables:
-            snaps = self._snaps(name)
-            kept = [s for s in snaps if keep(SimpleNamespace(table=name, round=s["round"]))]
-            dropped += len(snaps) - len(kept)
-            if len(kept) == len(snaps):
-                continue
-            if not kept:
-                self.spark.sql(f"DROP TABLE {self._tbl(name)}")
-            else:
-                self.spark.sql(
-                    f"CALL {self.cat}.system.rollback_to_snapshot"
-                    f"('{self.ns}.{name}', {kept[-1]['snapshot_id']})"
-                )
-        return dropped
-
-    def compact(self, spark: SparkSession, name: str, target_partitions: int | None = None) -> str:
-        """Iceberg's rewrite_data_files — the 1:1 mapping of
-        Catalog.compact (small-file folding; the steady-state crawl loop
-        calls this between rounds). target_partitions maps onto a target
-        file size only loosely; Iceberg's own bin-packing decides."""
-        self.spark.sql(
-            f"CALL {self.cat}.system.rewrite_data_files('{self.ns}.{name}')"
-        )
-        snaps = self._snaps(name)
-        return snaps[-1]["snapshot_id"] if snaps else ""
-
-    def expire_snapshots(self, name: str, keep_last: int = 1) -> int:
-        """Iceberg's expire_snapshots — drop all but the newest
-        `keep_last` ancestor snapshots and delete unreferenced files.
-        Returns the number of SNAPSHOTS dropped — the parquet Catalog's
-        contract — not the procedure's deleted-data-files count, which is
-        0 whenever the expired snapshots' files are still referenced
-        (r3 review: the two would silently diverge)."""
-        snaps = self._snaps(name)
-        drop = snaps[:-keep_last] if keep_last > 0 else snaps
-        if not drop:
-            return 0
-        self.spark.sql(
-            f"CALL {self.cat}.system.expire_snapshots("
-            f"table => '{self.ns}.{name}', "
-            f"snapshot_ids => ARRAY({', '.join(s['snapshot_id'] for s in drop)}))"
-        ).collect()
-        return len(drop)
-
-    def exists(self, name: str) -> bool:
-        return self.spark.catalog.tableExists(self._tbl(name))
-
-    def latest_round(self, name: str) -> int | None:
-        if not self.exists(name):
-            return None
-        s = self._snaps(name)
-        return s[-1]["round"] if s else None
-
-    def snapshots(self, name: str | None = None) -> list[dict]:
-        if name is not None:
-            return self._snaps(name)
-        out: list[dict] = []
-        for r in self.spark.sql(f"SHOW TABLES IN {self.cat}.{self.ns}").collect():
-            out.extend(self._snaps(r.tableName))
-        return out
-
-
 def snapshot_diff(
     spark: SparkSession,
     cat,
@@ -412,8 +213,8 @@ def snapshot_diff(
     keyed on key_cols and compared on value_cols (default: every shared
     non-key column).
 
-    Works against any catalog object exposing `load(spark, name, round)`
-    — both Catalog and IcebergCatalog.
+    Both sides are read through `cat.load(spark, name, round)`, the
+    catalog's time-travel.
 
     Scale shape: each side is reduced MAP-SIDE to key_cols plus one
     xxhash64 over the value columns before the full-outer join, so the

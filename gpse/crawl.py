@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,11 +46,6 @@ from gpse.extract import parse_extract
 class CrawlCfg:
     corpus: synth.CorpusCfg = field(default_factory=synth.CorpusCfg)
     # None = budget-bounded round, no global top-k (the production shape).
-    # NOTE: after rescore_frontier, priorities are CONTINUOUS — an explicit
-    # batch_size > frontier.CAP_DRIVER_MERGE_MAX then needs the
-    # quantile-on-priority cut that _distributed_cap does not implement and
-    # fails loudly on (>10k distinct priorities). Pair rescore_frontier
-    # with batch_size=None or batch_size ≤ 100k.
     batch_size: int | None = 2000
     n_salts: int = 8
     num_partitions: int = 32
@@ -100,55 +95,10 @@ class CrawlCfg:
     cache_compressed: bool = False
 
 
-# per-origin memo of fetch.detect_unique_captures (a corpus property; see
-# run_round). Keyed on (path, latest-mtime signature) so a parquet dir
-# REWRITTEN at a reused path re-detects instead of serving a stale answer
-# (ADVICE r03). Process-lifetime is the right scope: the bench and driver
-# reuse one immutable origin path across many rounds/runs.
-_UNIQUE_CAPTURES_CACHE: dict[tuple, bool] = {}
-
-# per-policy-snapshot memo of "any host has a '*'/'$' robots rule" (r6):
-# the flag picks schedule_batch's robots plan shape and is a property of
-# the committed host_policy generation, so a multi-round crawl pays its
-# tiny O(policy) detection job once per snapshot, not once per round.
-# Keyed on (catalog base, snap_id) — apply_trap_policy commits a NEW
-# host_policy snapshot, which re-detects.
-_POLICY_WILD_CACHE: dict[tuple, bool] = {}
-
-
 def _policy_any_wild(spark, cat: Catalog, policy: DataFrame) -> bool:
-    try:
-        snap = cat.snapshots("host_policy")[-1]["snap_id"]
-    except Exception:  # catalog without snapshot listing → no memo
-        snap = None
-    key = (cat.base, snap)
-    hit = _POLICY_WILD_CACHE.get(key) if snap is not None else None
-    if hit is None:
-        hit = bool(
-            policy.filter(frontier_mod._policy_has_wild()).limit(1).count()
-        )
-        if snap is not None:
-            _POLICY_WILD_CACHE[key] = hit
-    return hit
-
-
-def _corpus_cache_key(path: str) -> tuple:
-    """(path, max-mtime-ns, n-files) of the parquet dir — cheap local-fs
-    change signature. Non-local paths (s3a:// etc.) fall back to path-only
-    keying; callers there own invalidation via corpus_unique_captures."""
-    import os
-
-    try:
-        names = os.listdir(path)
-    except (OSError, ValueError):
-        return (path,)
-    mt = 0
-    for n in names:
-        try:
-            mt = max(mt, os.stat(os.path.join(path, n)).st_mtime_ns)
-        except OSError:
-            pass
-    return (path, mt, len(names))
+    """True when some host in `policy` has a '*'/'$' robots rule — the flag
+    that picks schedule_batch's robots plan shape (one tiny O(policy) job)."""
+    return bool(policy.filter(frontier_mod._policy_has_wild()).limit(1).count())
 
 
 def init_crawl(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, seeds=None, seed_df=None) -> None:
@@ -218,22 +168,9 @@ def run_round(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, round_n: int) ->
         n_sched_rows = sched.count()
     if cfg.corpus_bodies_path:
         bodies = spark.read.parquet(cfg.corpus_bodies_path)
-        uc = cfg.corpus_unique_captures
-        if uc is None:
-            # the answer is a property of the (fixed) origin corpus, not of
-            # the round — detect once per PATH and memoize module-side so a
-            # multi-round crawl doesn't re-run the full groupBy(url)
-            # detection job every round (ADVICE r02). Keyed on
-            # (path, mtime signature), not mutated onto the caller's cfg: a
-            # cfg repointed at a different origin — or the same path
-            # rewritten in-process — must re-detect (r3 review, ADVICE r03)
-            ck = _corpus_cache_key(cfg.corpus_bodies_path)
-            uc = _UNIQUE_CAPTURES_CACHE.get(ck)
-            if uc is None:
-                uc = fetch_mod.detect_unique_captures(bodies)
-                _UNIQUE_CAPTURES_CACHE[ck] = uc
+        # None detects per call; run/resume resolve it once per crawl
         fetched = fetch_mod.fetch_from_corpus(
-            sched, bodies, cfg.num_partitions, uc,
+            sched, bodies, cfg.num_partitions, cfg.corpus_unique_captures,
             max_broadcast_bytes=cfg.fetch_broadcast_max_bytes,
             batch_rows_hint=n_sched_rows,
         )
@@ -460,6 +397,7 @@ def expire_urls(
         last = last_complete_round(cat)
         round_n = 0 if last is None else last + 1
     k = keys.select("url_hash").dropDuplicates(["url_hash"]).persist()
+    k_ins = None
     try:
         seen = cat.load(spark, "seen_exact")
         # inserted ∩ expired — computed BEFORE the overwrite (needed for
@@ -497,7 +435,8 @@ def expire_urls(
                 )
             cat.commit("seen_bloom", upd, round_n, mode="overwrite")
     finally:
-        k_ins.unpersist()
+        if k_ins is not None:
+            k_ins.unpersist()
         k.unpersist()
     return {
         "n_expired": int(n_expired),
@@ -535,12 +474,8 @@ def rescore_frontier(
 
     Explicitly OPT-IN: the default loop keeps priority = depth·weight so
     the north_rule's deterministic crawl ordering stays bit-stable; after
-    a rescore, priorities are continuous, which (a) is still a total
-    order with url_hash as tiebreak, but (b) makes an explicit
-    batch_size > CAP_DRIVER_MERGE_MAX use the quantile-on-priority path
-    unavailable (frontier._distributed_cap fails loudly on >10k distinct
-    priorities) — budget-bounded rounds (batch_size=None, the production
-    shape) are unaffected. Rank sums are float aggregations; values are
+    a rescore, priorities are continuous, which is still a total order
+    with url_hash as tiebreak. Rank sums are float aggregations; values are
     rounded to 9 dp (like the oracle-checked query) so partition-order
     ULP noise cannot flip a priority comparison.
 
@@ -579,7 +514,7 @@ def rescore_frontier(
         round_n = 0 if last is None else last + 1
     if not cat.exists("pages"):  # nothing crawled yet: no graph, no-op
         return {"n_nodes": 0, "n_edges": 0, "rank_max": 0.0,
-                "wall_s": round(time.time() - t0, 3)}
+                "n_sweeps": 0, "wall_s": round(time.time() - t0, 3)}
     pages = cat.load(spark, "pages").filter(F.col("status") == 200)
     # ONE edge set per URL, not per capture (VERDICT r04 wrong-3): after
     # expire_urls a re-linked URL is fetched again, so pages legitimately
@@ -716,6 +651,18 @@ def rescore_frontier(
     }
 
 
+def _resolve_origin(spark: SparkSession, cfg: CrawlCfg) -> CrawlCfg:
+    """`cfg` with an undetected `corpus_unique_captures` resolved once for
+    the whole crawl: it is a property of the origin, not of any round, so
+    the multi-round loop must not re-run the detection job per round."""
+    if cfg.corpus_bodies_path and cfg.corpus_unique_captures is None:
+        bodies = spark.read.parquet(cfg.corpus_bodies_path)
+        cfg = replace(
+            cfg, corpus_unique_captures=fetch_mod.detect_unique_captures(bodies)
+        )
+    return cfg
+
+
 def run(
     spark: SparkSession,
     cat: Catalog,
@@ -725,6 +672,7 @@ def run(
 ) -> list[dict]:
     """Fresh crawl: init + n_rounds."""
     init_crawl(spark, cat, cfg, seeds)
+    cfg = _resolve_origin(spark, cfg)
     return [run_round(spark, cat, cfg, r) for r in range(n_rounds)]
 
 
@@ -736,4 +684,5 @@ def resume(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, n_more_rounds: int)
     rollback_incomplete(cat)
     last = last_complete_round(cat)
     start = 0 if last is None else last + 1
+    cfg = _resolve_origin(spark, cfg)
     return [run_round(spark, cat, cfg, r) for r in range(start, start + n_more_rounds)]

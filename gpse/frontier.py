@@ -13,9 +13,8 @@ north_star):
     can no longer reach skip the window entirely → deferred (the window's
     input is O(head), not O(queue) — VERDICT r04 #3)
   → per-host row_number ≤ budget_per_round          (politeness AT PLAN LEVEL)
-  → priority-queue pop: global top-k by (priority, url_hash) — TakeOrdered
-    for small k, the distributed exact threshold cut for large k
-    (_distributed_cap: no driver merge of k rows)
+  → priority-queue pop: global top-k by (priority, url_hash) when a batch
+    cap is set (TakeOrderedAndProject)
   → repartition(P, host, salt)                      (salted skew break)
   → sortWithinPartitions(host, salt, priority, url_hash)  (stable fetch order)
 
@@ -26,7 +25,6 @@ local[32] and across resume — the north_rule's "matching crawl ordering".
 
 from __future__ import annotations
 
-import logging
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -35,19 +33,11 @@ from pyspark.sql import functions as F
 from gpse import robots as R
 from gpse.urlnorm import canonicalize_udf, extract_host
 
-_LOG = logging.getLogger("gpse.frontier")
-
 FRONTIER_SCHEMA = (
     "round int, url string, url_hash long, host string, salt smallint, "
     "priority double, depth int, src_url_hash long, state string"
 )
 DEFAULT_BUDGET = 16
-# batch caps beyond this stop using the driver-merged TakeOrderedAndProject
-# and switch to the distributed threshold cut (_distributed_cap)
-CAP_DRIVER_MERGE_MAX = 100_000
-# _distributed_cap collects one (priority, count) row per distinct priority;
-# sane for depth-derived priorities, a bug for continuous scores
-CAP_MAX_PRIORITY_GROUPS = 10_000
 
 
 @contextmanager
@@ -120,99 +110,6 @@ def from_candidates(new_urls: DataFrame, round_n: int, n_salts: int = 8, depth_w
     return _finish(df.select("url", "priority", "depth", "src_url_hash"), round_n, n_salts)
 
 
-def _distributed_cap(ok: DataFrame, k: int) -> tuple[float, int] | None:
-    """EXACT top-k cut point on the total order (priority, url_hash),
-    computed without a global sort or a driver merge of k rows.
-
-    Returns (p_star, h_max) such that
-        {rows : priority < p_star OR (priority == p_star AND url_hash <= h_max)}
-    is precisely the k first rows of orderBy(priority, url_hash) — the same
-    set TakeOrderedAndProject would pick — or None when no cap is needed
-    (|ok| <= k). Assumes url_hash is unique within the round's queued set
-    (the frontier invariant: candidates are deduped on url_hash before
-    enqueue, deferred rows are disjoint from new discoveries).
-
-    Why not approxQuantile on priority: priority = depth × weight has only
-    ~max_depth distinct values, so quantiles cannot split inside a tie
-    group — and in the seed round ONE group is the whole frontier. Instead:
-      1. per-priority counts (≤ ~max_depth rows, collected) find the
-         boundary priority p* and how many rows m must come from its group;
-      2. url_hash is xxhash64 — uniform — so approxQuantile on url_hash
-         WITHIN the p* group brackets the m-th smallest tightly; rows below
-         the bracket are surely in, and only the thin bracket slice
-         (≈ 2·eps·group) is exactly sorted (driver-merged limit) to find
-         the true m-th value h_max.
-    All jobs run on the scheduler's persisted slim window set."""
-    # priority is depth-derived (~max_depth distinct values) — the collect
-    # below is tiny ONLY under that assumption. If priority ever becomes a
-    # continuous score, fail loudly instead of silently collecting a
-    # driver-sized group list (ADVICE r03).
-    n_prio = ok.agg(
-        F.approx_count_distinct("priority").alias("n")
-    ).collect()[0]["n"]
-    if n_prio > CAP_MAX_PRIORITY_GROUPS:
-        raise ValueError(
-            f"_distributed_cap: ~{n_prio} distinct priorities exceeds the "
-            f"{CAP_MAX_PRIORITY_GROUPS} group-collect cap; a continuous "
-            "priority needs a quantile-on-priority cut, not this path"
-        )
-    pc = sorted(
-        (r["priority"], r["n"])
-        for r in ok.groupBy("priority").agg(F.count("*").alias("n")).collect()
-    )
-    total = sum(n for _, n in pc)
-    if total <= k:
-        return None
-    c_below = 0
-    p_star = None
-    g = 0
-    for p, n in pc:
-        if c_below + n >= k:
-            p_star, g = p, n
-            break
-        c_below += n
-    m = k - c_below  # rows needed from the p* tie group (1 <= m <= g)
-    grp = ok.filter(F.col("priority") == p_star).select("url_hash")
-    if m >= g:
-        h_max = grp.agg(F.max("url_hash")).collect()[0][0]
-        return float(p_star), int(h_max)
-    frac = m / g
-    # bracket sized so the exact-sort slice stays ~tens of thousands of rows
-    eps = max(1e-4, min(0.01, 50_000.0 / g))
-    for attempt, width in enumerate((2.0, 8.0)):
-        lo_p = max(0.0, frac - width * eps)
-        hi_p = min(1.0, frac + width * eps)
-        h_lo, h_hi = grp.approxQuantile("url_hash", [lo_p, hi_p], eps)
-        c2 = grp.filter(F.col("url_hash") < h_lo).count()
-        need = m - c2
-        bracket_n = grp.filter(
-            (F.col("url_hash") >= h_lo) & (F.col("url_hash") <= h_hi)
-        ).count()
-        if need > 0 and c2 + bracket_n >= m:
-            h_max = (
-                grp.filter((F.col("url_hash") >= h_lo) & (F.col("url_hash") <= h_hi))
-                .orderBy("url_hash")
-                .limit(need)
-                .agg(F.max("url_hash"))
-                .collect()[0][0]
-            )
-            return float(p_star), int(h_max)
-        _LOG.warning(
-            "_distributed_cap: quantile bracket missed the boundary "
-            "(attempt %d, width %.0f*eps, need=%d, c2=%d, bracket_n=%d, "
-            "group=%d) — %s",
-            attempt + 1, width, need, c2, bracket_n, g,
-            "widening bracket" if attempt == 0 else
-            "FALLING BACK to driver-merged exact pick (scale hazard)",
-        )
-    # both brackets missed (approxQuantile guarantee violated twice —
-    # should be unreachable): exact but driver-merged pick within the group
-    h_max = (
-        grp.orderBy("url_hash").limit(m).agg(F.max("url_hash")).collect()[0][0]
-    )
-    return float(p_star), int(h_max)
-
-
 def _policy_has_wild():
     """Per-HOST wildcard flag, evaluated on the (tiny, broadcast) policy
     side — one array scan per policy row instead of one per queued
@@ -227,10 +124,9 @@ def _policy_has_wild():
 
 
 def _with_allowed(j: DataFrame, any_wild: bool = True) -> DataFrame:
-    """Joined (queued ⋈ policy) rows → + boolean `allowed` column.
-    When `j` carries the policy-side `_has_wild` flag (_policy_has_wild,
-    one eval per policy row) it is used; otherwise the flag is computed
-    inline per row (compatibility path for direct callers).
+    """Joined (queued ⋈ policy) rows → + boolean `allowed` column. `j`
+    must carry the policy-side `_has_wild` flag (_policy_has_wild, one
+    eval per policy row), as schedule_batch selects it.
 
     Robots precedence (RFC 9309: longest match wins, Allow wins ties) is
     pure prefix logic when no rule carries '*'/'$' — the overwhelmingly
@@ -246,12 +142,7 @@ def _with_allowed(j: DataFrame, any_wild: bool = True) -> DataFrame:
     path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
     dis = F.coalesce(F.col("disallow"), F.array())
     alw = F.coalesce(F.col("allow"), F.array())
-    if "_has_wild" in j.columns:
-        has_wild = F.coalesce(F.col("_has_wild"), F.lit(False))
-    else:
-        has_wild = F.exists(
-            F.concat(dis, alw), lambda r: r.contains("*") | r.contains("$")
-        )
+    has_wild = F.coalesce(F.col("_has_wild"), F.lit(False))
     longest = lambda rules: F.aggregate(  # noqa: E731
         F.filter(rules, lambda d: path.startswith(d)),
         F.lit(0),
@@ -384,7 +275,6 @@ def schedule_batch(
     host_policy: DataFrame,
     batch_size: int,
     num_partitions: int = 32,
-    cap_driver_merge_max: int = CAP_DRIVER_MERGE_MAX,
     band_pruning: bool = True,
     any_wild: bool | None = None,
     compress_cache: bool = False,
@@ -430,9 +320,7 @@ def schedule_batch(
     # robots eval collapses to the single plain branch: ONE pass over the
     # queued set instead of the two the filter+union pays, and no
     # ArrowEvalPython stage to plan/compile at all. O(policy) ≪ O(queue);
-    # the answer is a property of the rule set, not of the frontier, so
-    # round loops pass it memoized per policy snapshot (crawl.run_round)
-    # and only standalone callers pay the job here.
+    # callers that already know the answer pass `any_wild` and skip it.
     if any_wild is None:
         any_wild = bool(pol.filter(F.col("_has_wild")).limit(1).count())
     j = q.join(F.broadcast(pol), "host", "left")
@@ -484,7 +372,7 @@ def schedule_batch(
         hw.unpersist() if hw is not None else None,
         j.unpersist(),
     )
-    if batch_size is not None and batch_size <= cap_driver_merge_max:
+    if batch_size is not None:
         # priority-queue pop: global top-k by the total order. Spark's
         # TakeOrderedAndProject is driver-merged — right for k ≪ frontier;
         # for an uncapped round (batch_size=None) the budget window already
@@ -497,20 +385,6 @@ def schedule_batch(
         )
         deferred = deferred.unionByName(overflow)
         ok = capped
-    elif batch_size is not None:
-        # large explicit cap (VERDICT r02 #2): TakeOrderedAndProject merges
-        # all k rows in the driver — a 10^7 cap would be a driver-side sort.
-        # Cut by a distributed threshold on the same total order instead:
-        # identical selection, pure filters, no global sort anywhere.
-        cut = _distributed_cap(ok, batch_size)
-        if cut is not None:
-            p_star, h_max = cut
-            in_cap = (F.col("priority") < p_star) | (
-                (F.col("priority") == p_star) & (F.col("url_hash") <= h_max)
-            )
-            overflow = ok.filter(~in_cap).select(*frontier.columns)
-            deferred = deferred.unionByName(overflow)
-            ok = ok.filter(in_cap)
     sched = (
         ok.select(*frontier.columns, F.coalesce(F.col("crawl_delay_ms"), F.lit(0)).alias("crawl_delay_ms"))
         .repartition(num_partitions, F.col("host"), F.col("salt"))

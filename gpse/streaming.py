@@ -130,8 +130,7 @@ def host_token_bucket_tws(pages: DataFrame, budget_total: int = 5) -> DataFrame:
 
     Executing this API requires `google.protobuf` (Spark's state-server
     protocol); the sandbox ships no protobuf wheel and has no pip mirror
-    (SURVEY.md §7.2), so the parity test skips offline — same honest
-    gating as the Iceberg-jar contract test."""
+    (SURVEY.md §7.2), so the parity test skips offline."""
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

@@ -242,3 +242,41 @@ def test_bucket_local_bloom_probe_matches(spark, baseline, tmp_path):
     cfg.bloom_broadcast_max_bytes = 0
     crawl.run(spark, cat_d, cfg, 3)
     assert _seen_set(spark, cat_a) == _seen_set(spark, cat_d)
+
+
+def test_parquet_origin_detects_unique_captures_once(spark, tmp_path, monkeypatch):
+    """An undetected corpus_unique_captures is a property of the origin:
+    a multi-round crawl over a parquet origin runs the detection job once,
+    not once per round."""
+    import numpy as np
+    import pandas as pd
+
+    from gpse import fetch
+
+    ids = np.arange(CORPUS.n_pages, dtype=np.uint64)
+    origin = str(tmp_path / "origin")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": synth.url_of(ids, CORPUS),
+                "warc_ts": pd.to_datetime(synth.warc_ts_us(ids, CORPUS), unit="us"),
+                "html": synth.html_for(ids, CORPUS),
+            }
+        ),
+        "url string, warc_ts timestamp, html binary",
+    ).write.parquet(origin)
+
+    calls = []
+    detect = fetch.detect_unique_captures
+
+    def counting_detect(bodies):
+        calls.append(bodies)
+        return detect(bodies)
+
+    monkeypatch.setattr(fetch, "detect_unique_captures", counting_detect)
+    cfg = _cfg(4)
+    cfg.corpus_bodies_path = origin
+    assert cfg.corpus_unique_captures is None
+    stats = crawl.run(spark, Catalog(str(tmp_path / "cat")), cfg, 2)
+    assert len(calls) == 1
+    assert all(s["n_scheduled"] > 0 for s in stats)

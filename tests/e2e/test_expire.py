@@ -164,3 +164,12 @@ def test_expire_requires_inserted_keys_only_for_blob_surgery(spark, tmp_path):
     crawl.resume(spark, cat, cfg, 1)
     counts = cat.load(spark, "pages").groupBy("url_hash").count()
     assert counts.filter(F.col("count") > 1).count() == 0
+
+
+def test_expire_without_seen_exact_raises_key_error(spark, tmp_path):
+    """A catalog with no seen_exact table surfaces the catalog's KeyError,
+    not an error from releasing caches that were never created."""
+    cat = Catalog(str(tmp_path / "empty"))
+    keys = spark.range(0, 5).select(F.xxhash64("id").alias("url_hash"))
+    with pytest.raises(KeyError, match="seen_exact"):
+        crawl.expire_urls(spark, cat, _cfg("cuckoo"), keys)

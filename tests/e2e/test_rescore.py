@@ -75,6 +75,8 @@ def test_rescore_empty_catalog_pages(spark, tmp_path):
     except Exception as exc:
         pytest.fail(f"rescore on page-less catalog should no-op, raised {exc!r}")
     assert res["n_nodes"] == 0
+    assert set(res) == {"n_nodes", "n_edges", "rank_max", "n_sweeps", "wall_s"}
+    assert res["n_sweeps"] == 0
 
 
 def test_rescore_recrawled_page_counts_edges_once(spark, tmp_path):

@@ -71,50 +71,6 @@ def test_commit_after_prune_never_reuses_orphan_dirs(spark, tmp_path):
     assert cat.load(spark, "t").count() == 8
 
 
-# ---- real-Iceberg backend (jar-gated; same interface contract) ----------
-
-import os
-
-needs_iceberg = pytest.mark.skipif(
-    not os.environ.get("GPSE_ICEBERG"),
-    reason="requires iceberg-spark-runtime jar on the session classpath "
-    "(no jar / no network in this sandbox; set GPSE_ICEBERG=1 on a cluster)",
-)
-
-
-@needs_iceberg
-def test_iceberg_catalog_roundtrip_timetravel_prune(spark, tmp_path):
-    """The IcebergCatalog must satisfy the exact contract test_catalog pins
-    for the parquet Catalog: commit/load roundtrip, append accumulation,
-    round time-travel, and prune-as-rollback."""
-    from gpse.catalog import IcebergCatalog
-
-    spark.conf.set("spark.sql.catalog.gpse", "org.apache.iceberg.spark.SparkCatalog")
-    spark.conf.set("spark.sql.catalog.gpse.type", "hadoop")
-    spark.conf.set("spark.sql.catalog.gpse.warehouse", str(tmp_path))
-    cat = IcebergCatalog(spark)
-    cat.commit("t", spark.range(5), 0, mode="append")
-    cat.commit("t", spark.range(7), 1, mode="append")
-    assert cat.load(spark, "t").count() == 12
-    assert cat.load(spark, "t", round=0).count() == 5
-    assert cat.load_delta(spark, "t", 1).count() == 7
-    assert cat.latest_round("t") == 1
-    assert cat.prune(lambda s: s.round <= 0) == 1
-    assert cat.load(spark, "t").count() == 5
-    # rolled-back snapshots must be invisible to round resolution even
-    # before expire_snapshots (ancestor-chain walk, ADVICE r02)
-    assert cat.latest_round("t") == 0
-    with pytest.raises(KeyError):
-        cat.load_delta(spark, "t", 1)
-    # maintenance parity: rewrite_data_files keeps reads + round intact
-    # and stays invisible to load_delta (inherited-round compaction flag)
-    cat.commit("t", spark.range(7), 1, mode="append")
-    cat.compact(spark, "t")
-    assert cat.latest_round("t") == 1
-    assert cat.load(spark, "t").count() == 12
-    assert cat.load_delta(spark, "t", 1).count() == 7
-
-
 def test_compact_folds_append_chain(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     for r in range(3):
@@ -195,9 +151,8 @@ def test_snapshot_diff_classifies_added_removed_changed(spark, tmp_path):
     assert full[2] == "unchanged" and len(full) == 5
 
 
-def test_snapshot_diff_explicit_value_cols_and_iceberg_interface(spark, tmp_path):
-    """Restricting value_cols masks changes outside them; works through any
-    object exposing load(spark, name, round) (the shared catalog interface)."""
+def test_snapshot_diff_explicit_value_cols(spark, tmp_path):
+    """Restricting value_cols masks changes outside them."""
     from gpse.catalog import snapshot_diff
 
     cat = Catalog(str(tmp_path))

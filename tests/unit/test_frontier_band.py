@@ -95,7 +95,11 @@ def test_head_is_small_and_tail_skips_window(spark):
     fr, pol = _frontier(spark), _policy(spark)
     q = fr.filter(F.col("state") == "queued")
     j = q.join(
-        F.broadcast(pol), "host", "left"
+        F.broadcast(
+            pol.select("*", frontier_mod._policy_has_wild().alias("_has_wild"))
+        ),
+        "host",
+        "left",
     )
     al = frontier_mod._with_allowed(j).filter(F.col("allowed"))
     auto, boundary, tail, cleanup = frontier_mod._split_head(al)

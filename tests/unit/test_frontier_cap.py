@@ -1,7 +1,8 @@
-"""Large-batch cap: the distributed threshold cut must pick EXACTLY the
-same batch as the driver-merged orderBy().limit(k) — including inside
-priority tie groups (the seed round is one giant tie group) — while the
-plan stays free of TakeOrderedAndProject (VERDICT r02 #2)."""
+"""Batch cap: for an explicit batch_size the scheduler must pick EXACTLY the
+first k rows of the total order (priority, url_hash) — including when k
+falls inside a priority tie group (the seed round is one giant tie group)
+and for continuous post-rescore priorities with a cap above 100k — and
+defer precisely the rest."""
 
 from __future__ import annotations
 
@@ -11,26 +12,19 @@ from pyspark.sql import functions as F
 from gpse import frontier as frontier_mod
 
 
-def _frontier(spark, n=1200):
-    # three uneven priority tie groups (0.0 dominates, like a seed round)
-    return (
-        spark.range(0, n)
-        .select(
-            F.lit(0).alias("round"),
-            F.concat(F.lit("http://h"), (F.col("id") % 5).cast("string"),
-                     F.lit(".example/p/"), F.col("id").cast("string")).alias("url"),
-            F.xxhash64(F.col("id")).alias("url_hash"),
-            F.concat(F.lit("h"), (F.col("id") % 5).cast("string"),
-                     F.lit(".example")).alias("host"),
-            (F.col("id") % 4).cast("smallint").alias("salt"),
-            F.when(F.col("id") % 6 < 4, 0.0)
-            .when(F.col("id") % 6 == 4, 1.0)
-            .otherwise(2.0)
-            .alias("priority"),
-            (F.col("id") % 3).cast("int").alias("depth"),
-            F.lit(None).cast("long").alias("src_url_hash"),
-            F.lit("queued").alias("state"),
-        )
+def _frontier(spark, n, priority):
+    return spark.range(0, n).select(
+        F.lit(0).alias("round"),
+        F.concat(F.lit("http://h"), (F.col("id") % 5).cast("string"),
+                 F.lit(".example/p/"), F.col("id").cast("string")).alias("url"),
+        F.xxhash64(F.col("id")).alias("url_hash"),
+        F.concat(F.lit("h"), (F.col("id") % 5).cast("string"),
+                 F.lit(".example")).alias("host"),
+        (F.col("id") % 4).cast("smallint").alias("salt"),
+        priority.alias("priority"),
+        (F.col("id") % 3).cast("int").alias("depth"),
+        F.lit(None).cast("long").alias("src_url_hash"),
+        F.lit("queued").alias("state"),
     )
 
 
@@ -43,130 +37,43 @@ def _policy(spark):
     )
 
 
-@pytest.mark.parametrize("k", [100, 700, 900, 1199])
-def test_distributed_cap_matches_take_ordered(spark, k):
-    fr, pol = _frontier(spark), _policy(spark)
-    sched_d, _, def_d, cl_d = frontier_mod.schedule_batch(
-        fr, pol, k, 4, cap_driver_merge_max=0  # force the distributed cut
-    )
-    sched_t, _, def_t, cl_t = frontier_mod.schedule_batch(
-        fr, pol, k, 4, cap_driver_merge_max=10**9  # force TakeOrdered
-    )
-    try:
-        got = sorted(r.url for r in sched_d.collect())
-        want = sorted(r.url for r in sched_t.collect())
-        assert len(want) == k
-        assert got == want
-        # the deferral complement matches too
-        assert sorted(r.url for r in def_d.collect()) == sorted(
-            r.url for r in def_t.collect()
+def _priority(kind):
+    if kind == "tied":
+        # three uneven tie groups (0.0 dominates, like a seed round)
+        return (
+            F.when(F.col("id") % 6 < 4, 0.0)
+            .when(F.col("id") % 6 == 4, 1.0)
+            .otherwise(2.0)
         )
-    finally:
-        cl_d()
-        cl_t()
+    # continuous post-rescore-like scores: 50,000 distinct values, with ties
+    return F.pmod(F.xxhash64(F.col("id"), F.lit(2)), F.lit(50_000)) / 100.0
 
 
-def test_distributed_cap_no_cap_needed(spark):
-    fr, pol = _frontier(spark, n=50), _policy(spark)
-    sched, _, deferred, cl = frontier_mod.schedule_batch(
-        fr, pol, 1000, 4, cap_driver_merge_max=0
+@pytest.mark.parametrize(
+    "n,k,kind",
+    [
+        # the 700th row falls inside the 800-row priority-0.0 group
+        (1200, 700, "tied"),
+        (130_000, 100_500, "continuous"),
+    ],
+    ids=["k_inside_tie_group", "continuous_k_over_100k"],
+)
+def test_cap_matches_sort_oracle(spark, n, k, kind):
+    fr = _frontier(spark, n, _priority(kind))
+    order = sorted(
+        (r.priority, r.url_hash, r.url)
+        for r in fr.select("priority", "url_hash", "url").collect()
+    )
+    sched, denied, deferred, cl = frontier_mod.schedule_batch(
+        fr, _policy(spark), k, 4
     )
     try:
-        assert sched.count() == 50
-        assert deferred.count() == 0
-    finally:
-        cl()
-
-
-def test_distributed_cap_priority_cardinality_guard(spark, monkeypatch):
-    """A continuous (high-cardinality) priority must fail LOUDLY instead of
-    silently collecting one row per distinct value (ADVICE r03)."""
-    monkeypatch.setattr(frontier_mod, "CAP_MAX_PRIORITY_GROUPS", 2)
-    ok = spark.range(0, 100).select(
-        (F.col("id").cast("double") / 7.0).alias("priority"),
-        F.xxhash64("id").alias("url_hash"),
-    )
-    with pytest.raises(ValueError, match="group-collect cap"):
-        frontier_mod._distributed_cap(ok, 10)
-
-
-def test_distributed_cap_bracket_miss_warns_widens_then_falls_back(
-    spark, monkeypatch, caplog
-):
-    """Force approxQuantile to violate its guarantee: the cut must log a
-    warning, retry a wider bracket, then driver-merge as last resort —
-    never silently — and STILL return the exact TakeOrdered cut
-    (VERDICT r03 next-round #7)."""
-    import logging
-
-    # patch the CONCRETE class (Spark 4: pyspark.sql.DataFrame is the
-    # abstract base; instances dispatch to classic.dataframe.DataFrame)
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    ok = _frontier(spark, n=600).select("priority", "url_hash")
-    k = 250  # boundary lands inside the priority-0.0 tie group (400 rows)
-    want = ok.orderBy("priority", "url_hash").limit(k)
-    want_max = want.agg(F.max("url_hash")).collect()[0][0]
-
-    real_aq = DataFrame.approxQuantile
-    calls = {"n": 0}
-
-    def bad_aq(self, col, probs, eps):
-        calls["n"] += 1
-        mx = self.agg(F.max(col)).collect()[0][0]
-        return [mx, mx]  # c2 = g-1 >= m -> need <= 0: guarantee "violated"
-
-    monkeypatch.setattr(DataFrame, "approxQuantile", bad_aq)
-    with caplog.at_level(logging.WARNING, logger="gpse.frontier"):
-        p_star, h_max = frontier_mod._distributed_cap(ok, k)
-    assert calls["n"] == 2  # initial bracket + one widened retry
-    warns = [
-        r for r in caplog.records if "quantile bracket missed" in r.getMessage()
-    ]
-    assert len(warns) == 2
-    assert "FALLING BACK" in warns[1].getMessage()
-    assert p_star == 0.0 and h_max == want_max  # fallback is still exact
-
-    # and a bracket that recovers on the widened retry warns only once
-    calls["n"] = 0
-    caplog.clear()
-
-    def flaky_aq(self, col, probs, eps):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            mx = self.agg(F.max(col)).collect()[0][0]
-            return [mx, mx]
-        return real_aq(self, col, probs, eps)
-
-    monkeypatch.setattr(DataFrame, "approxQuantile", flaky_aq)
-    with caplog.at_level(logging.WARNING, logger="gpse.frontier"):
-        p2, h2 = frontier_mod._distributed_cap(ok, k)
-    assert calls["n"] == 2
-    assert (
-        len(
-            [
-                r
-                for r in caplog.records
-                if "quantile bracket missed" in r.getMessage()
-            ]
-        )
-        == 1
-    )
-    assert p2 == 0.0 and h2 == want_max
-
-
-def test_distributed_cap_plan_has_no_take_ordered(spark):
-    import io
-    from contextlib import redirect_stdout
-
-    fr, pol = _frontier(spark), _policy(spark)
-    sched, _, _, cl = frontier_mod.schedule_batch(
-        fr, pol, 700, 4, cap_driver_merge_max=0
-    )
-    try:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            sched.explain("formatted")
-        assert "TakeOrderedAndProject" not in buf.getvalue()
+        got = [r.url for r in sched.select("url").collect()]
+        assert len(got) == k
+        assert set(got) == {u for _, _, u in order[:k]}
+        got_def = [r.url for r in deferred.select("url").collect()]
+        assert len(got_def) == n - k
+        assert set(got_def) == {u for _, _, u in order[k:]}
+        assert denied.count() == 0
     finally:
         cl()
