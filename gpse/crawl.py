@@ -24,7 +24,7 @@ batch ordering (tested in tests/e2e).
 
 from __future__ import annotations
 
-import os
+import logging
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
@@ -40,6 +40,8 @@ from gpse import seen as seen_mod
 from gpse import synth
 from gpse.catalog import Catalog
 from gpse.extract import parse_extract
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -101,15 +103,10 @@ def _policy_any_wild(spark, cat: Catalog, policy: DataFrame) -> bool:
     return bool(policy.filter(frontier_mod._policy_has_wild()).limit(1).count())
 
 
-def init_crawl(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, seeds=None, seed_df=None) -> None:
-    """Round 0 state: seeds → frontier + seen + seen_bloom, robots → policy.
-    `seed_df` (url, priority) lets large benches build seeds distributively."""
-    if seed_df is not None:
-        f0 = frontier_mod.from_seed_df(seed_df, cfg.n_salts)
-    else:
-        seeds = seeds if seeds is not None else synth.seed_urls(cfg.corpus)
-        f0 = frontier_mod.from_seeds(spark, seeds, cfg.n_salts)
-    f0 = f0.persist()
+def init_crawl(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, seeds=None) -> None:
+    """Round 0 state: seeds → frontier + seen + seen_bloom, robots → policy."""
+    seeds = seeds if seeds is not None else synth.seed_urls(cfg.corpus)
+    f0 = frontier_mod.from_seeds(spark, seeds, cfg.n_salts).persist()
     cat.commit("frontier", f0, 0, mode="append")
     seen0 = f0.select("url_hash", F.lit(0).cast("int").alias("first_round"))
     cat.commit("seen_exact", seen0, 0, mode="append")
@@ -126,15 +123,15 @@ def init_crawl(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, seeds=None, see
 
 @contextmanager
 def _t(label: str, sink: dict | None = None):
-    """Per-action wall timing: printed when GPSE_TIMING=1 (perf triage) and
-    recorded into `sink` when given (bench stage breakdowns)."""
+    """Per-action wall timing: logged at DEBUG on the `gpse.crawl` logger
+    (perf triage) and recorded into `sink` when given (bench stage
+    breakdowns)."""
     t0 = time.time()
     yield
     dt = time.time() - t0
     if sink is not None:
         sink[label] = round(sink.get(label, 0.0) + dt, 3)
-    if os.environ.get("GPSE_TIMING") == "1":
-        print(f"[gpse-timing] {label}: {dt:.1f}s", flush=True)
+    _log.debug("%s: %.1fs", label, dt)
 
 
 def run_round(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, round_n: int) -> dict:

@@ -238,6 +238,28 @@ class _PartFile(WriterCommitMessage):
     n_rows: int
 
 
+def read_manifest(path: str) -> list[dict] | None:
+    """The file entries ({"file", "n_rows"}) of the `_SUCCESS` manifest an
+    AtomicDirWriter committed under directory `path`, or None when no job
+    has committed there. Readers list only these files, so staged
+    `_tmp-*` leftovers of a crashed job stay invisible."""
+    import json
+    import os
+
+    manifest_path = os.path.join(path, "_SUCCESS")
+    if not os.path.exists(manifest_path):
+        return None
+    with open(manifest_path, encoding="utf-8") as f:
+        return json.load(f).get("files", [])
+
+
+def committed_name(tmp: str) -> str:
+    """Basename a staged `_tmp-*` file carries once `commit` renames it."""
+    import os
+
+    return os.path.basename(tmp).replace("_tmp-", "part-", 1)
+
+
 class AtomicDirWriter(DataSourceWriter):
     """Write path of the API (the full source/sink surface): an
     atomic-directory JSONL sink with the SAME two-phase commit protocol
@@ -247,14 +269,19 @@ class AtomicDirWriter(DataSourceWriter):
     manifest listing them (readers honor only manifest-listed files, so a
     crash between renames leaves an ignorable partial dir); `abort`
     removes the temp files. Exactly Spark's FileCommitProtocol shape,
-    expressed through the Python writer API and crash-tested."""
+    expressed through the Python writer API and crash-tested.
+
+    Subclasses change the payload only: `suffix` names the part files and
+    `_write_part` streams the rows into one staged file (gpse/warc.py's
+    .warc.gz sink)."""
+
+    suffix = ".jsonl"
 
     def __init__(self, options: dict, overwrite: bool) -> None:
         self.path = options["path"]
         self.overwrite = overwrite
 
     def write(self, iterator) -> _PartFile:
-        import json
         import os
         import uuid
 
@@ -262,24 +289,25 @@ class AtomicDirWriter(DataSourceWriter):
 
         os.makedirs(self.path, exist_ok=True)
         tid = TaskContext.get().taskAttemptId() if TaskContext.get() else uuid.uuid4().hex
-        tmp = os.path.join(self.path, f"_tmp-{tid}-{uuid.uuid4().hex[:8]}.jsonl")
+        tmp = os.path.join(self.path, f"_tmp-{tid}-{uuid.uuid4().hex[:8]}{self.suffix}")
+        return _PartFile(path=tmp, n_rows=self._write_part(tmp, iterator))
+
+    def _write_part(self, tmp: str, rows) -> int:
+        """Stream `rows` into the staged file `tmp`; return the row count."""
+        import json
+
         n = 0
         with open(tmp, "w", encoding="utf-8") as f:
-            for row in iterator:
+            for row in rows:
                 f.write(json.dumps(row.asDict(), default=str) + "\n")
                 n += 1
-        return _PartFile(path=tmp, n_rows=n)
+        return n
 
     def commit(self, messages) -> None:
         import json
         import os
 
-        manifest_path = os.path.join(self.path, "_SUCCESS")
-        prior: list = []
-        if os.path.exists(manifest_path):
-            with open(manifest_path, encoding="utf-8") as f:
-                prior = json.load(f).get("files", [])
-
+        prior = read_manifest(self.path) or []
         final = []
         for m in messages:
             if m is None or m.n_rows == 0:
@@ -288,10 +316,7 @@ class AtomicDirWriter(DataSourceWriter):
                 continue
             # Rename only the basename: a directory whose NAME contains
             # "_tmp-" must not be touched by the tmp→part rename.
-            dst = os.path.join(
-                os.path.dirname(m.path),
-                os.path.basename(m.path).replace("_tmp-", "part-", 1),
-            )
+            dst = os.path.join(os.path.dirname(m.path), committed_name(m.path))
             os.replace(m.path, dst)
             final.append({"file": os.path.basename(dst), "n_rows": m.n_rows})
 
@@ -309,6 +334,7 @@ class AtomicDirWriter(DataSourceWriter):
             # merge the prior manifest into the new one (catalog parity).
             final = prior + final
 
+        manifest_path = os.path.join(self.path, "_SUCCESS")
         tmp = manifest_path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump({"files": final}, f)

@@ -367,24 +367,34 @@ def schedule_batch(
         deferred = al.limit(0).select(*frontier.columns)
     if tail is not None:
         deferred = deferred.unionByName(tail.select(*frontier.columns))
-    cleanup = lambda: (  # noqa: E731
-        keys_cleanup(),
-        hw.unpersist() if hw is not None else None,
-        j.unpersist(),
-    )
+    capped = None
     if batch_size is not None:
         # priority-queue pop: global top-k by the total order. Spark's
         # TakeOrderedAndProject is driver-merged — right for k ≪ frontier;
         # for an uncapped round (batch_size=None) the budget window already
         # bounds the batch and the selection is a set, so no global sort.
         # Rows within budget but beyond the batch cap also defer; capped
-        # and overflow both derive from the persisted window set.
-        capped = ok.orderBy("priority", "url_hash").limit(batch_size)
+        # and overflow both derive from the persisted window set. The
+        # top-k itself is persisted like `hw`: the batch and the overflow
+        # anti-join behind `deferred` are separate actions, and without
+        # the cache the second one re-runs the TakeOrderedAndProject.
+        with uncompressed_cache(frontier.sparkSession, not compress_cache):
+            capped = (
+                ok.orderBy("priority", "url_hash")
+                .limit(batch_size)
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
         overflow = ok.join(capped.select("url_hash"), "url_hash", "left_anti").select(
             *frontier.columns
         )
         deferred = deferred.unionByName(overflow)
         ok = capped
+    cleanup = lambda: (  # noqa: E731
+        keys_cleanup(),
+        hw.unpersist() if hw is not None else None,
+        capped.unpersist() if capped is not None else None,
+        j.unpersist(),
+    )
     sched = (
         ok.select(*frontier.columns, F.coalesce(F.col("crawl_delay_ms"), F.lit(0)).alias("crawl_delay_ms"))
         .repartition(num_partitions, F.col("host"), F.col("salt"))

@@ -6,13 +6,12 @@ bytes stay in their own top-level column so Catalyst prunes them out of
 every plan that doesn't need them, and all byte-touching work happens in
 Arrow-batched ``mapInPandas`` (never per-row Python).
 
-The container has no image/audio codecs (SURVEY.md §7.2), so the actual
-decode is STUBBED: ``decode_asset_real`` raises NotImplementedError unless
-Pillow/soundfile import, and the pipeline runs ``fake_decode`` — a
-deterministic stand-in that derives plausible metadata (width/height/
-duration/channels) from the bytes alone. Everything Spark-side — schema,
-partition sizing, UDF signature, Arrow batch shape — is real and tested;
-swapping in a real codec changes only the body of one function.
+The container has no image/audio codecs (SURVEY.md §7.2), so the
+pipeline decodes with ``fake_decode`` — a deterministic stand-in that
+derives plausible metadata (width/height/duration/channels) from the
+bytes alone. Everything Spark-side — schema, partition sizing, UDF
+signature, Arrow batch shape — is real and tested; swapping in a real
+codec changes only the body of one function.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ASSET_SCHEMA = "asset_id long, kind string, data binary, source string"
 DECODED_SCHEMA = (
     "asset_id long, kind string, n_bytes long, sha1_8 string, "
     "width int, height int, duration_ms int, channels int, ok boolean"
@@ -47,24 +45,6 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
         F.encode("text", "UTF-8").alias("data"),
         "source",
     )
-
-
-def decode_asset_real(data: bytes, kind: str) -> dict:
-    """Real decode path — requires codecs this container doesn't ship.
-    Gated behind import-try per the brief; the pipeline uses fake_decode."""
-    try:
-        if kind == "image":
-            from PIL import Image  # noqa: F401
-        elif kind == "audio":
-            import soundfile  # noqa: F401
-        else:
-            import av  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            f"no codec for {kind!r} in this environment ({e}); "
-            "use fake_decode (deterministic stub)"
-        ) from e
-    raise NotImplementedError("real decode wiring lands when codecs exist")
 
 
 def fake_decode(data: bytes, kind: str) -> dict:
@@ -153,23 +133,3 @@ def byte_stats_arrow(assets: DataFrame) -> DataFrame:
             )
 
     return assets.mapInArrow(run, "asset_id long, n_bytes long")
-
-
-def resize_stub(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Image-resize stage: real resize needs a codec (NotImplementedError
-    via decode_asset_real); the plumbing contract — binary in, binary out,
-    same partitioning — is what this stage pins down."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            # stub: passthrough bytes; a real impl decodes→resizes→encodes
-            yield pd.DataFrame(
-                {
-                    "asset_id": b["asset_id"].to_numpy(),
-                    "kind": b["kind"].to_numpy(),
-                    "data": b["data"],
-                    "source": b["source"].to_numpy(),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=ASSET_SCHEMA)

@@ -20,7 +20,7 @@ hashing (Kirsch–Mitzenmacher) over splitmix64.
 
 from __future__ import annotations
 
-import os
+import logging
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
+
+_log = logging.getLogger(__name__)
 
 SEEN_SCHEMA = "url_hash long, first_round int"
 BLOOM_SCHEMA = "bucket int, nbits long, nhashes int, bits binary"
@@ -328,16 +330,15 @@ def dedup_new_urls(
             else F.length("bits")
         )
         total_bytes = blooms.agg(F.sum(sz).alias("b")).collect()[0]["b"] or 0
-    if os.environ.get("GPSE_TIMING") == "1":
-        # name the physical probe path once per call (VERDICT r05 #6): the
-        # broadcast→cogroup flip is a silent plan change at the 64 MiB
-        # blob boundary; this line makes bench artifacts self-explaining
-        path = "bucket-local cogroup" if total_bytes > max_broadcast_bytes else "driver-broadcast"
-        print(
-            f"[gpse-timing] seen pre-filter probe path: {path} "
-            f"(blob_bytes={total_bytes}, threshold={max_broadcast_bytes})",
-            flush=True,
-        )
+    # name the physical probe path once per call (VERDICT r05 #6): the
+    # broadcast→cogroup flip is a silent plan change at the 64 MiB blob
+    # boundary; this DEBUG line makes bench artifacts self-explaining
+    _log.debug(
+        "seen pre-filter probe path: %s (blob_bytes=%d, threshold=%d)",
+        "bucket-local cogroup" if total_bytes > max_broadcast_bytes else "driver-broadcast",
+        total_bytes,
+        max_broadcast_bytes,
+    )
     if total_bytes > max_broadcast_bytes:
         return _dedup_bucket_probe(cand, seen, blooms, n_buckets)
 

@@ -27,7 +27,7 @@ import re
 from urllib.parse import quote, unquote, urlsplit, urlunsplit, parse_qsl, urlencode, urljoin
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 from pyspark.sql.functions import pandas_udf
@@ -160,12 +160,3 @@ def extract_host(url: Column) -> Column:
     """Registrable host of an (already canonical) URL — pure JVM built-ins
     (parse_url stays inside whole-stage codegen; no Python round-trip)."""
     return F.lower(F.parse_url(url, F.lit("HOST")))
-
-
-def with_canonical(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Add canonical url, url_hash (xxhash64, JVM-side) and host columns."""
-    out = df.withColumn(url_col, canonicalize_udf(F.col(url_col)))
-    return (
-        out.withColumn("url_hash", F.xxhash64(F.col(url_col)))
-        .withColumn("host", extract_host(F.col(url_col)))
-    )

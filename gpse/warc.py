@@ -19,10 +19,10 @@ mirroring gpse/datasource.py's discipline:
   `pushFilters` absorbs warc_file equality/IN into PARTITION pruning —
   a predicate on the file name never opens the other files.
 - WRITE: every task streams its rows into one `_tmp-*.warc.gz` (a
-  warcinfo record, then one response record per row); commit renames
-  tmp→part and writes the `_SUCCESS` manifest LAST (same two-phase
-  protocol as gpse/catalog.py and AtomicDirWriter — crash between
-  renames leaves an ignorable partial dir).
+  warcinfo record, then one response record per row); commit and abort
+  are AtomicDirWriter's (gpse/datasource.py): rename tmp→part, then write
+  the `_SUCCESS` manifest LAST — a crash between renames leaves an
+  ignorable partial dir.
 
 Record mapping (response records only; warcinfo/request/metadata records
 are recognized and skipped on read):
@@ -49,13 +49,13 @@ from typing import IO, Iterator, Sequence
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     EqualTo,
     Filter,
     In,
     InputPartition,
-    WriterCommitMessage,
 )
+
+from gpse.datasource import AtomicDirWriter, committed_name, read_manifest
 
 READ_SCHEMA = (
     "url string, warc_ts timestamp, status int, html binary, "
@@ -228,17 +228,14 @@ class _WarcFile(InputPartition):
 
 def _list_warc_files(path: str) -> list[str]:
     import glob
-    import json
     import os
 
     if os.path.isdir(path):
-        manifest = os.path.join(path, "_SUCCESS")
-        if os.path.exists(manifest):
+        entries = read_manifest(path)
+        if entries is not None:
             # a 2PC-committed export dir: honor the manifest (uncommitted
             # stragglers from a crashed job are invisible, catalog parity)
-            with open(manifest, encoding="utf-8") as fh:
-                names = [e["file"] for e in json.load(fh).get("files", [])]
-            return sorted(os.path.join(path, n) for n in names)
+            return sorted(os.path.join(path, e["file"]) for e in entries)
         return sorted(
             os.path.join(path, n)
             for n in os.listdir(path)
@@ -309,44 +306,22 @@ class WarcReader(DataSourceReader):
             yield flush()
 
 
-@dataclass
-class _WarcPart(WriterCommitMessage):
-    path: str
-    n_rows: int
+class WarcWriter(AtomicDirWriter):
+    """Two-phase-commit .warc.gz sink: AtomicDirWriter's staging, commit,
+    abort and manifest, with each part file written as gzip WARC records.
+    The reader honors the manifest."""
 
+    suffix = ".warc.gz"
 
-class WarcWriter(DataSourceWriter):
-    """Two-phase-commit .warc.gz sink (AtomicDirWriter's protocol, WARC
-    payload): tasks write `_tmp-*.warc.gz`, commit renames tmp→part and
-    writes `_SUCCESS` last; append merges the prior manifest, overwrite
-    removes superseded parts. The reader honors the manifest."""
-
-    def __init__(self, options: dict, overwrite: bool) -> None:
-        self.path = options["path"]
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> _WarcPart:
-        import gzip
-        import os
-        import uuid as _uuid
-
-        from pyspark import TaskContext
-
-        os.makedirs(self.path, exist_ok=True)
-        tid = (
-            TaskContext.get().taskAttemptId()
-            if TaskContext.get()
-            else _uuid.uuid4().hex
-        )
-        base = f"_tmp-{tid}-{_uuid.uuid4().hex[:8]}.warc.gz"
-        tmp = os.path.join(self.path, base)
-        n = 0
+    def _write_part(self, tmp: str, rows) -> int:
         import datetime as dt
+        import gzip
 
+        n = 0
         epoch = dt.datetime(1970, 1, 1)
         with gzip.open(tmp, "wb") as f:
-            f.write(format_warcinfo(base.replace("_tmp-", "part-", 1)))
-            for row in iterator:
+            f.write(format_warcinfo(committed_name(tmp)))
+            for row in rows:
                 ts = row["warc_ts"]
                 # naive datetimes are epoch-anchored throughout the engine
                 # (datasource._row_block convention) — NOT .timestamp(),
@@ -362,48 +337,7 @@ class WarcWriter(DataSourceWriter):
                     )
                 )
                 n += 1
-        return _WarcPart(path=tmp, n_rows=n)
-
-    def commit(self, messages) -> None:
-        import json
-        import os
-
-        manifest_path = os.path.join(self.path, "_SUCCESS")
-        prior: list = []
-        if os.path.exists(manifest_path):
-            with open(manifest_path, encoding="utf-8") as f:
-                prior = json.load(f).get("files", [])
-        final = []
-        for m in messages:
-            if m is None or m.n_rows == 0:
-                if m is not None and os.path.exists(m.path):
-                    os.remove(m.path)
-                continue
-            dst = os.path.join(
-                os.path.dirname(m.path),
-                os.path.basename(m.path).replace("_tmp-", "part-", 1),
-            )
-            os.replace(m.path, dst)
-            final.append({"file": os.path.basename(dst), "n_rows": m.n_rows})
-        if self.overwrite:
-            stale = {e["file"] for e in prior} - {e["file"] for e in final}
-            for name in stale:
-                p = os.path.join(self.path, name)
-                if os.path.exists(p):
-                    os.remove(p)
-        else:
-            final = prior + final
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"files": final}, f)
-        os.replace(tmp, manifest_path)
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.path):
-                os.remove(m.path)
+        return n
 
 
 class WarcDataSource(DataSource):
@@ -426,11 +360,9 @@ class WarcDataSource(DataSource):
 # --------------------------------------------------------------------------
 
 def _register(spark) -> None:
+    # re-registering the same source in a session is a no-op in Spark 4.1
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(WarcDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(WarcDataSource)
 
 
 def read_warc(spark, path: str):
@@ -448,10 +380,8 @@ def export_warc(pages_df, path: str, mode: str = "errorifexists") -> None:
     Modes: errorifexists (default — refuses a path with a committed
     manifest; checked driver-side because the Python DataSource write API
     only carries Append/Overwrite), append, overwrite."""
-    import os
-
     if mode in ("errorifexists", "error"):
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
+        if read_manifest(path) is not None:
             raise FileExistsError(
                 f"WARC export target {path} already has a committed archive "
                 "(pass mode='append' or mode='overwrite')"
@@ -507,12 +437,5 @@ def export_incremental(
 
 def _manifest_n_rows(path: str) -> int:
     """Sum of per-part exact row counts recorded in the writer's committed
-    _SUCCESS manifest (0 if no committed archive yet)."""
-    import json
-    import os
-
-    p = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(p):
-        return 0
-    with open(p, encoding="utf-8") as f:
-        return sum(e["n_rows"] for e in json.load(f).get("files", []))
+    manifest (0 if no committed archive yet)."""
+    return sum(e["n_rows"] for e in read_manifest(path) or [])

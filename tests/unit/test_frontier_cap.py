@@ -77,3 +77,35 @@ def test_cap_matches_sort_oracle(spark, n, k, kind):
         assert denied.count() == 0
     finally:
         cl()
+
+
+def _live_operators(plan) -> list[str]:
+    """Class names of the physical operators `plan` would execute. A cached
+    relation is a leaf here: the plan it was built from (which `explain`
+    prints beneath it) is not run again, so it is not descended into."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    return [name] + [n for kid in kids for n in _live_operators(kid)]
+
+
+def test_deferred_reuses_cached_top_k(spark):
+    """Once the capped batch is cached, the `deferred` overflow anti-join
+    must read the persisted top-k, not run TakeOrderedAndProject again."""
+    fr = _frontier(spark, 5000, _priority("tied"))
+    sched, _, deferred, cl = frontier_mod.schedule_batch(fr, _policy(spark), 500, 4)
+    try:
+        sched.persist()
+        assert sched.count() == 500
+        ops = _live_operators(deferred._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScanExec" in ops, ops
+        assert not [o for o in ops if o.startswith("TakeOrderedAndProject")], ops
+        assert deferred.count() == 4500
+    finally:
+        sched.unpersist()
+        cl()

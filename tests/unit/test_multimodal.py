@@ -43,11 +43,6 @@ def test_kind_specific_fields(spark, assets):
     assert vid.width is not None and vid.duration_ms is not None
 
 
-def test_real_decode_is_gated(spark):
-    with pytest.raises(NotImplementedError):
-        M.decode_asset_real(b"xx", "image")
-
-
 def test_features_fixed_dim_and_normalized(spark, assets):
     f = M.extract_features(assets)
     rows = f.collect()
@@ -57,12 +52,6 @@ def test_features_fixed_dim_and_normalized(spark, assets):
     for r in rows[:10]:
         n = math.sqrt(sum(x * x for x in r.feature))
         assert abs(n - 1.0) < 1e-5
-
-
-def test_resize_stub_preserves_contract(spark, assets):
-    out = M.resize_stub(assets, 64, 64)
-    assert out.schema.simpleString() == assets.schema.simpleString()
-    assert out.count() == assets.count()
 
 
 def test_byte_stats_arrow_matches_length(spark, assets):

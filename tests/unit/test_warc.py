@@ -192,6 +192,29 @@ def test_uncommitted_tmp_files_invisible(spark, tmp_path):
     assert urls == [ADVERSARIAL[0][0]]
 
 
+def test_export_abort_leaves_no_committed_state(spark, tmp_path):
+    """A failing export job must abort: no _SUCCESS manifest and no
+    committed part files, so a rerun in the default mode is not refused
+    and reads back only its own rows."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "abort")
+
+    @F.udf("string")
+    def boom(url):
+        if "h3" in url:
+            raise RuntimeError("injected task failure")
+        return url
+
+    df = _mk_df(spark, ADVERSARIAL).repartition(3)
+    with pytest.raises(Exception):
+        warc.export_warc(df.withColumn("url", boom("url")), out)
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert not [n for n in os.listdir(out) if n.startswith("part-")] if os.path.isdir(out) else True
+    warc.export_warc(_mk_df(spark, ADVERSARIAL[:1]), out)
+    assert [r["url"] for r in warc.read_warc(spark, out).collect()] == [ADVERSARIAL[0][0]]
+
+
 # --------------------------------------------------------------------------
 # export_incremental — per-round delta archival via the catalog changelog
 # --------------------------------------------------------------------------
