@@ -122,7 +122,7 @@ def pages_stages(cores: int) -> dict:
 
 def dedup_stages(cores: int) -> dict:
     """Decompose the 'dedup + frontier commit' stage: candidate explode +
-    dedup agg → + pre-filter probe → + exact anti-join → + frontier build
+    dedup agg → + exact anti-join → + frontier build
     and deferred union → the real parquet commit. Prefix plans, noop-timed
     (guide §1.4), after an untimed round-0 pages commit."""
     import shutil
@@ -162,7 +162,6 @@ def dedup_stages(cores: int) -> dict:
         pl = cat.load_delta(spark, "pages", 0)
 
         seen = cat.load(spark, "seen_exact", 0)
-        blooms = cat.load(spark, "seen_bloom", 0)
         cands = (
             pl.select(
                 F.col("url_hash").alias("src_url_hash"),
@@ -180,14 +179,8 @@ def dedup_stages(cores: int) -> dict:
             *[F.min(c).alias(c) for c in attrs]
         ).select(*cands.columns)
         out["explode_agg_s"] = _noop(spark, "dedup: + agg", agg)
-        blob_hint = cfg.n_bloom_buckets * (cfg.bloom_bits // 8)
-        new_urls = seen_mod.dedup_new_urls(
-            cands, seen, blooms, cfg.n_bloom_buckets,
-            cfg.bloom_broadcast_max_bytes, blob_bytes_hint=blob_hint,
-        )
-        out["explode_agg_probe_anti_s"] = _noop(
-            spark, "dedup: + probe + anti-join", new_urls
-        )
+        new_urls = seen_mod.dedup_new_urls(cands, seen)
+        out["explode_agg_anti_s"] = _noop(spark, "dedup: + anti-join", new_urls)
         new_part = frontier_mod.from_candidates(
             new_urls, 1, cfg.n_salts, cfg.depth_weight
         )

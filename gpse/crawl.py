@@ -5,7 +5,7 @@ checkpoint-resumable crawl rounds … resumes exactly from any round's
 snapshot checkpoint". One round = one batch job over the catalog's tables:
 
     frontier(R) → schedule_batch → mapInPandas fetch → parse_extract
-    → explode links → dedup vs seen (bloom + exact anti-join)
+    → explode links → dedup vs seen (exact anti-join)
     → commit pages/seen/frontier(R+1)/metrics + manifest
 
 Commit order makes the metrics commit the round's completion marker: a
@@ -54,16 +54,11 @@ class CrawlCfg:
     n_bloom_buckets: int = 32
     bloom_bits: int = 1 << 20   # fixed per-bucket bits → OR-mergeable blobs
     use_bloom: bool = True
-    # pre-filter family: 'bloom' (default; smallest blobs) or 'cuckoo'
-    # (deletion-capable — gpse/cuckoo.py; same probe paths, same contract)
+    # filter family: 'bloom' (default; smallest blobs) or 'cuckoo'
+    # (deletion-capable — gpse/cuckoo.py; same contract). The blobs are
+    # built, merged per round and expired; the dedup does not read them.
     seen_filter: str = "bloom"
-    # fixed per-blob buckets → mergeable. NOTE the default blob total
-    # (n_bloom_buckets=32 × 2^18 × 4 slots × 2 B) is exactly 64 MiB —
-    # precisely AT bloom_broadcast_max_bytes, and the `>` comparison keeps
-    # it on the broadcast-probe path (stash bytes are excluded from the
-    # sizing hint). Raising either knob flips the physical plan to the
-    # bucket-local cogroup probe silently; both paths are parity-tested
-    # (bloom≡cuckoo≡exact e2e), so the flip is safe — just not obvious.
+    # fixed per-blob buckets → mergeable (2^18 × 4 slots × 2 B per blob)
     cuckoo_nbuckets: int = 1 << 18
     # fetch pacing (synthetic-origin path): 'simulated' stamps the
     # politeness clock without sleeping (deterministic, benchable);
@@ -72,8 +67,8 @@ class CrawlCfg:
     # milliseconds instead of real crawl delays)
     fetch_pacing: str = "simulated"
     fetch_time_scale: float = 1.0
-    # blobs beyond this switch from driver-broadcast probing to the
-    # bucket-local cogroup probe (SCALE.md: ~15 GB of blobs at 10^10 URLs)
+    # no effect: the dedup no longer probes the blobs. Kept because
+    # perfbench/crawlbench.py reads it; goes with ROADMAP direction 1
     bloom_broadcast_max_bytes: int = 64 << 20
     depth_weight: float = 1.0
     max_depth: int = 100
@@ -229,21 +224,10 @@ def run_round(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, round_n: int) ->
         .filter(F.col("depth") <= cfg.max_depth)
         .withColumn("url_hash", F.xxhash64("url"))
     )
-    blooms = cat.load(spark, "seen_bloom", round_n) if cfg.use_bloom else None
     # dedup_new_urls reduces per-URL attributes deterministically (min depth,
     # min src_url_hash) BEFORE the seen anti-join — a url discovered from
     # several sources keeps a partition-layout-independent (depth, src)
-    # fixed-shape blobs → statically known total size, no measuring job
-    if cfg.seen_filter == "cuckoo":
-        from gpse import cuckoo as _ck
-
-        blob_hint = cfg.n_bloom_buckets * cfg.cuckoo_nbuckets * _ck.SLOTS * 2
-    else:
-        blob_hint = cfg.n_bloom_buckets * (cfg.bloom_bits // 8)
-    new_urls = seen_mod.dedup_new_urls(
-        cands, seen, blooms, cfg.n_bloom_buckets, cfg.bloom_broadcast_max_bytes,
-        blob_bytes_hint=blob_hint,
-    )
+    new_urls = seen_mod.dedup_new_urls(cands, seen)
 
     # carry-over: budget/batch-overflow rows stay queued — re-enqueued for
     # round+1 with priority intact (D2 'budget_deferred'; a priority queue
@@ -282,6 +266,7 @@ def run_round(spark: SparkSession, cat: Catalog, cfg: CrawlCfg, round_n: int) ->
         if cfg.use_bloom:
             # incremental: O(new URLs) delta blobs folded into the carried
             # blobs (bloom OR / cuckoo re-insert — never a full rebuild)
+            blooms = cat.load(spark, "seen_bloom", round_n)
             delta = seen_mod.build_filters(
                 new_seen, cfg.n_bloom_buckets, kind=cfg.seen_filter,
                 nbits=cfg.bloom_bits, cuckoo_nb=cfg.cuckoo_nbuckets,
@@ -373,17 +358,17 @@ def expire_urls(
       3. `seen_bloom`  — cuckoo blobs: distributed delete via
          seen.remove_from_filters, restricted to keys ∩ seen_exact
          (deleting a never-inserted key could evict a colliding resident
-         fingerprint → false negative → pre-filter would pass a SEEN url
-         straight through as definitely-new). Bloom blobs can't delete:
-         rebuilt from the surviving seen set (O(seen) — documented cost of
-         choosing bloom; pick seen_filter='cuckoo' where expiry is hot).
+         fingerprint — a false negative, which the filter contract
+         forbids). Bloom blobs can't delete: rebuilt from the surviving
+         seen set (O(seen) — documented cost of choosing bloom; pick
+         seen_filter='cuckoo' where expiry is hot).
 
-    Crash-consistency (resume-safe without a two-table transaction): a
-    stale pre-filter blob that still CONTAINS an expired key only routes
-    the candidate to the exact anti-join, which now passes it as new —
-    the pre-filter is allowed false positives by contract, so every
-    partial-commit state is semantically consistent. The commits use
-    round_n = last_complete_round + 1 (default), which
+    Crash-consistency (resume-safe without a two-table transaction): the
+    dedup reads only `seen_exact`, so a stale filter blob never changes a
+    round's result. A blob that still CONTAINS an expired key (the crash
+    fell before layer 3, and a re-run's keys ∩ seen_exact no longer holds
+    it) is a false positive, which the filter contract allows. The
+    commits use round_n = last_complete_round + 1 (default), which
     rollback_incomplete preserves across restarts.
 
     Returns {"n_expired", "n_remaining", "wall_s"}; cost is O(expired) +

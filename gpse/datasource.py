@@ -143,40 +143,24 @@ class SynthWebReader(DataSourceReader):
 
 
 def _col_block(start: int, end: int, cfg) -> dict | None:
-    """The corpus columns for one id range — ONE shared implementation of
-    the row logic (host/url/ts/html/lang + the ~5% second captures at
-    +45 days, mirroring synth.gen_pages) consumed by both the batch
-    reader (Arrow path) and the streaming reader (tuple path), so the two
-    source surfaces cannot drift apart."""
+    """The corpus columns for one id range (synth.capture_rows, with host
+    names and the empty `text`), consumed by both the batch reader (Arrow
+    path) and the streaming reader (tuple path)."""
     import numpy as np
 
     from gpse import synth
 
     if end <= start:
         return None
-    ids = np.arange(start, end, dtype=np.uint64)
-    hosts_n = synth.host_of(ids, cfg)
-    urls = synth.url_of(ids, cfg)
-    ts = synth.warc_ts_us(ids, cfg).astype(np.int64)
-    html = synth.html_for(ids, cfg)
-    langs = [
-        synth._LANGS[int(x)]
-        for x in (synth.mix64(hosts_n.astype(np.uint64), cfg.seed, 9) % np.uint64(4))
-    ]
-    recrawl = (synth.mix64(ids, cfg.seed, 8) % np.uint64(20)) == np.uint64(0)
-    dup = np.flatnonzero(recrawl)
-    day45_us = 45 * 86400 * 1_000_000
-    pid = ids.astype(np.int64).tolist()
-    hostnames = [f"h{int(h)}.example" for h in hosts_n]
-    ts_l = ts.tolist()
+    rows = synth.capture_rows(np.arange(start, end, dtype=np.uint64), cfg)
     return {
-        "page_id": pid + [pid[i] for i in dup],
-        "host": hostnames + [hostnames[i] for i in dup],
-        "url": urls + [urls[i] for i in dup],
-        "warc_ts_us": ts_l + [ts_l[i] + day45_us for i in dup],
-        "html": html + [html[i] for i in dup],
-        "text": [""] * (len(pid) + len(dup)),
-        "lang": langs + [langs[i] for i in dup],
+        "page_id": rows["page_id"].tolist(),
+        "host": [f"h{h}.example" for h in rows["host"].tolist()],
+        "url": rows["url"],
+        "warc_ts_us": rows["warc_ts_us"].tolist(),
+        "html": rows["html"],
+        "text": [""] * len(rows["url"]),
+        "lang": rows["lang"],
     }
 
 

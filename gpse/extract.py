@@ -1,4 +1,4 @@
-"""HTML → (text, outlinks) extraction as vectorized Arrow UDFs.
+"""HTML → (text, outlinks) extraction over Arrow batches.
 
 Capability parity: north_star — "Link extraction … and text extraction run
 as vectorized Arrow/pandas UDFs with no per-row Python, reproducing
@@ -23,8 +23,9 @@ Extraction spec (frozen):
     empty, javascript:/mailto:/data: hrefs dropped; duplicates kept
     (document order preserved — dedup is the frontier's job)
 
-The UDF is the iterator form so the parser class/regex setup is amortized
-once per Arrow-batch stream, and the per-task Python worker stays hot.
+`parse_extract` is a mapInArrow batch function, so the parser class/regex
+setup is amortized once per Arrow-batch stream, and the per-task Python
+worker stays hot.
 """
 
 from __future__ import annotations
@@ -34,10 +35,7 @@ from html import unescape
 from html.parser import HTMLParser
 from typing import Iterator, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from gpse.urlnorm import _FAST_CANONICAL_RE, resolve_one
@@ -48,13 +46,6 @@ _BLOCK_TAGS = frozenset(
 )
 _SKIP_TAGS = frozenset("script style noscript template".split())
 _WS_RE = re.compile(r"\s+")
-
-EXTRACT_SCHEMA = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("links", ArrayType(StringType())),
-    ]
-)
 
 
 class _Extractor(HTMLParser):
@@ -298,23 +289,11 @@ def _extract_reference(raw: str, base_url: str) -> Tuple[str, list[str]]:
     return _finalize(p.chunks, p.links, base_url)
 
 
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_udf(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-    for html, url in it:
-        texts: list[str] = []
-        links: list[list[str]] = []
-        for h, u in zip(html, url):
-            t, l = extract_one(h, u)
-            texts.append(t)
-            links.append(l)
-        yield pd.DataFrame({"text": texts, "links": links})
-
-
 def make_links_udtf():
     """Python UDTF form of link extraction — `extract_links(url, html) →
     rows(pos, link)` (SURVEY.md §2.10 names this as the table-function
     alternative to array+explode). Row-at-a-time by nature, so the hot path
-    stays with extract_udf+explode; the UDTF exists for SQL-surface parity:
+    stays with parse_extract+explode; the UDTF exists for SQL-surface parity:
 
         spark.udtf.register("extract_links", make_links_udtf())
         SELECT f.* FROM pages, LATERAL extract_links(url, html) f
@@ -343,17 +322,15 @@ def parse_extract(
 
     Implemented with mapInArrow: passthrough columns ride the Arrow stream
     as raw buffers (no pandas object materialization) and only html/url are
-    converted to Python for the parser — measured ~30% faster than the
-    scalar pandas-UDF form on the bench round's 626k-page batch. The
-    pandas-UDF form (`extract_udf`) stays as the column-level surface;
-    tests pin both paths to identical output, and the golden fixtures
-    freeze the bytes.
+    converted to Python for the parser — measured ~30% faster than a
+    scalar pandas-UDF form on the bench round's 626k-page batch. Every
+    row's text/links are exactly `extract_one`'s (pinned in tests), and
+    the golden fixtures freeze the bytes.
 
     `html` should be pruned right after so downstream stages never shuffle
     page bodies (column-pruning discipline, SURVEY §4).
     """
     import pyarrow as pa
-    from pyspark.sql.types import StructType
 
     if "text" in pages.columns or "links" in pages.columns:
         raise ValueError("parse_extract input must not already have text/links columns")
@@ -395,13 +372,3 @@ def parse_extract(
     if with_lang:
         out_fields.append(StructField("lang", StringType()))
     return pages.mapInArrow(run, StructType(out_fields))
-
-
-def parse_extract_pandas(pages: DataFrame, html_col: str = "html", url_col: str = "url") -> DataFrame:
-    """The scalar pandas-UDF form of parse_extract (one ArrowEvalPython
-    projection). Kept as the reference implementation the mapInArrow hot
-    path is equality-tested against."""
-    ex = pages.withColumn("_ex", extract_udf(F.col(html_col), F.col(url_col)))
-    return ex.withColumn("text", F.col("_ex.text")).withColumn(
-        "links", F.col("_ex.links")
-    ).drop("_ex")

@@ -216,8 +216,7 @@ def fetch_from_corpus(
 ) -> DataFrame:
     """Fetch with a parquet-backed origin (the bench/replay path).
 
-    Plan shape, switched on the scheduled batch's estimated size — the same
-    threshold pattern as seen.dedup_new_urls' bloom-blob switch
+    Plan shape, switched on the scheduled batch's estimated size
     (ADVICE/VERDICT r02: an UNCONDITIONAL broadcast of the batch is
     driver-memory- and Amdahl-bound at the 10M-URL design point):
 

@@ -1,36 +1,31 @@
-"""URL-seen set: partitioned bloom pre-filter + exact anti-join (D3).
+"""URL-seen set: exact anti-join dedup + mergeable bloom/cuckoo blobs (D3).
 
 Capability parity: north_star — "a partitioned bloom/cuckoo-filter URL-seen
 set keyed by canonicalized URL hash". Two physical layers (SURVEY.md §1.2):
 
   * ``seen_exact(url_hash, first_round)`` — ground truth, hash-partitioned
-    on url_hash; dedup correctness is asserted ONLY on this layer.
-  * per-bucket bloom blobs — a cheap pre-filter so that at 10^10-URL scale
-    the expensive shuffled anti-join only sees candidates the bloom cannot
-    rule out. Bloom false positives cost one extra probe; false negatives
-    are impossible (property-tested), so correctness never depends on it.
-
-At sandbox scale both paths run; at cluster scale the bloom blobs (a few
-MB per bucket) broadcast to every executor while seen_exact stays sharded.
+    on url_hash. `dedup_new_urls` reads ONLY this layer: candidates are
+    reduced per url_hash and left-anti-joined against it.
+  * per-bucket filter blobs (bloom, or deletion-capable cuckoo —
+    gpse/cuckoo.py) — built at init, merged per round from the new keys,
+    and expired with `remove_from_filters`. False negatives are impossible
+    (property-tested). The dedup does not probe them: every candidate
+    has to meet the exact join regardless, so a probe saves no join work,
+    and a blob set that missed a key could only re-emit a seen URL.
 
 PySpark 4.1.2 exposes no df.stat.bloomFilter (verified), so blobs are built
 with applyInPandas over groupBy(pmod(url_hash, P)) — numpy bitsets, double
-hashing (Kirsch–Mitzenmacher) over splitmix64.
+hashing (Kirsch–Mitzenmacher) over the splitmix64 finalizer cuckoo.py uses.
 """
 
 from __future__ import annotations
-
-import logging
-from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
-_log = logging.getLogger(__name__)
+from gpse import cuckoo
 
 SEEN_SCHEMA = "url_hash long, first_round int"
 BLOOM_SCHEMA = "bucket int, nbits long, nhashes int, bits binary"
@@ -38,17 +33,12 @@ BLOOM_SCHEMA = "bucket int, nbits long, nhashes int, bits binary"
 # fingerprints + an exact-fp stash; deletion-capable, mergeable at fixed nb
 CUCKOO_SCHEMA = "bucket int, nbuckets long, tbl binary, stash binary"
 
-_C1 = np.uint64(0xFF51AFD7ED558CCD)
-_C2 = np.uint64(0xC4CEB9FE1A85EC53)
-
 
 def _h2(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Two independent 64-bit hashes per key (double hashing base)."""
     x = keys.astype(np.uint64)
-    z = (x ^ (x >> np.uint64(33))) * _C1
-    z = (z ^ (z >> np.uint64(33))) * _C2
-    h1 = z ^ (z >> np.uint64(33))
-    h2 = (h1 ^ x) * _C1 | np.uint64(1)  # odd → full-period stride
+    h1 = cuckoo._mix(x)
+    h2 = (h1 ^ x) * cuckoo._C1 | np.uint64(1)  # odd → full-period stride
     return h1, h2
 
 
@@ -106,11 +96,10 @@ def build_blooms(
 
 def build_cuckoos(seen: DataFrame, n_buckets: int = 32, nb: int = 1 << 18) -> DataFrame:
     """One cuckoo-filter blob per url_hash bucket (the deletion-capable
-    seen pre-filter; same bucketing as the blooms so the probe paths are
-    shared). `nb` (power of two) fixes each blob's bucket count so blobs
-    stay mergeable across rounds — the analogue of the blooms' fixed
-    nbits. Default 2^18 × 4 slots ≈ 1M fingerprints per blob at 2 MiB."""
-    from gpse import cuckoo
+    seen pre-filter; same bucketing as the blooms). `nb` (power of two)
+    fixes each blob's bucket count so blobs stay mergeable across rounds —
+    the analogue of the blooms' fixed nbits. Default 2^18 × 4 slots ≈ 1M
+    fingerprints per blob at 2 MiB."""
 
     def make(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = pdf["url_hash"].to_numpy(dtype=np.int64)
@@ -135,7 +124,6 @@ def merge_cuckoos(old: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold per-bucket cuckoo blobs (the incremental per-round merge — the
     cuckoo analogue of the blooms' OR; gpse/cuckoo.py re-inserts the delta
     blob's (bucket, fp) entries, recoverable via the XOR trick)."""
-    from gpse import cuckoo
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         nb = int(pdf["nbuckets"].iloc[0])
@@ -179,8 +167,6 @@ def remove_from_filters(blobs: DataFrame, keys: DataFrame, n_buckets: int) -> Da
             "bloom blobs do not support deletion — rebuild via build_blooms, "
             "or use CrawlCfg.seen_filter='cuckoo'"
         )
-    from gpse import cuckoo as _ck
-
     kb = keys.select(
         "url_hash", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket")
     )
@@ -189,19 +175,19 @@ def remove_from_filters(blobs: DataFrame, keys: DataFrame, n_buckets: int) -> Da
         if bdf.empty:
             return pd.DataFrame(columns=["bucket", "nbuckets", "tbl", "stash"])
         nb = int(bdf["nbuckets"].iloc[0])
-        # several blob rows per bucket can exist mid-merge (same shape
-        # _dedup_bucket_probe handles): fold them FIRST so no row's
-        # fingerprints are silently dropped, then delete from the fold
+        # several blob rows per bucket can exist mid-merge: fold them
+        # FIRST so no row's fingerprints are silently dropped, then delete
+        # from the fold
         tbl, stash = None, None
         for _, r in bdf.iterrows():
-            t = np.frombuffer(r["tbl"], dtype=np.uint16).reshape(nb, _ck.SLOTS)
+            t = np.frombuffer(r["tbl"], dtype=np.uint16).reshape(nb, cuckoo.SLOTS)
             s = np.frombuffer(r["stash"], dtype=np.uint16)
             if tbl is None:
                 tbl, stash = t.copy(), s.copy()
             else:
-                tbl, stash = _ck.merge(tbl, stash, t, s)
+                tbl, stash = cuckoo.merge(tbl, stash, t, s)
         if not kdf.empty:
-            stash, _ = _ck.delete(kdf["url_hash"].to_numpy(dtype=np.int64), tbl, stash)
+            stash, _ = cuckoo.delete(kdf["url_hash"].to_numpy(dtype=np.int64), tbl, stash)
         return pd.DataFrame(
             {
                 "bucket": [int(bdf["bucket"].iloc[0])],
@@ -258,6 +244,9 @@ def merge_blooms(old: DataFrame, delta: DataFrame) -> DataFrame:
 def dedup_new_urls(
     candidates: DataFrame,
     seen: DataFrame,
+    # unused: perfbench/crawlbench.py still passes the pre-filter blobs and
+    # their probe settings; these go when perfbench calls run_round
+    # (ROADMAP direction 1)
     blooms: DataFrame | None = None,
     n_buckets: int = 32,
     max_broadcast_bytes: int = 64 << 20,
@@ -266,30 +255,21 @@ def dedup_new_urls(
     """Truly-new URLs: candidates ∖ seen_exact (north_star dedup).
 
     Plan shape (SURVEY.md §3.1 step 6):
-      1. in-batch exact dedup — groupBy(url_hash[, url]) with min() over
-         every attribute column (partial+final hash agg, map-side
-         combined). min(), NOT dropDuplicates: a URL discovered from many
-         sources must keep a DETERMINISTIC (depth, src) — dropDuplicates
-         keeps an arbitrary partition-layout-dependent row, which would
-         leak into priority=depth and break the north_rule's
+      1. in-batch exact dedup — groupBy(url_hash) with min() over every
+         attribute column (partial+final hash agg, map-side combined).
+         min(), NOT dropDuplicates: a URL discovered from many sources
+         must keep a DETERMINISTIC (depth, src) — dropDuplicates keeps an
+         arbitrary partition-layout-dependent row, which would leak into
+         priority=depth and break the north_rule's
          partition-count-independent crawl ordering;
-      2. optional bloom pre-filter, two physical strategies switched on
-         total blob size (SCALE.md: at the 10^10-URL design point the
-         blobs total ~15 GB — too big for one broadcast variable):
-           a. blobs ≤ max_broadcast_bytes — collect + SparkContext
-              broadcast captured in the UDF closure, shipped once per
-              executor. (Never join the blob column onto candidate rows:
-              a 1 MiB blob × millions of rows re-materializes per row and
-              pushes terabytes through the shuffle/Arrow boundary —
-              measured fatal at a 2M-URL frontier.)
-           b. blobs > max_broadcast_bytes — BUCKET-LOCAL probe: cogroup
-              candidates with blooms on bucket = pmod(url_hash, P); each
-              task receives one bucket's candidates AND only that
-              bucket's blob. One slim shuffle of candidates, no driver
-              collect, no full-blob-set copy anywhere.
-         Definitely-new rows skip the anti-join either way.
-      3. exact left-anti join on url_hash for the maybe-seen remainder —
-         on the same key seen_exact is sharded by.
+      2. exact left-anti join on url_hash against seen_exact — on the
+         same key seen_exact is sharded by. One row per new url_hash,
+         however many seen_exact rows a key has.
+
+    `blooms`, `n_buckets`, `max_broadcast_bytes` and `blob_bytes_hint`
+    are unused. The pre-filter cannot skip the join: every candidate must
+    be checked against seen_exact anyway, so a probe only adds a blob
+    collect (or a cogroup shuffle) and a Python pass over the candidates.
     """
     # Group by url_hash ALONE (r6): url_hash is the engine-wide URL
     # identity, so `url` folds into the min-attributes (all equal within a
@@ -315,80 +295,7 @@ def dedup_new_urls(
         )
     else:
         cand = candidates.dropDuplicates(keys)
-    if blooms is None:
-        return cand.join(_seen_build(seen), "url_hash", "left_anti")
-
-    # Fixed-nbits blobs have a statically known total (buckets × nbits/8):
-    # the caller passes it as a hint so path selection costs ZERO Spark
-    # jobs. Only variable-size blob sets pay the measuring aggregate.
-    if blob_bytes_hint is not None:
-        total_bytes = blob_bytes_hint
-    else:
-        sz = (
-            F.length("tbl") + F.length("stash")
-            if is_cuckoo_blobs(blooms)
-            else F.length("bits")
-        )
-        total_bytes = blooms.agg(F.sum(sz).alias("b")).collect()[0]["b"] or 0
-    # name the physical probe path once per call (VERDICT r05 #6): the
-    # broadcast→cogroup flip is a silent plan change at the 64 MiB blob
-    # boundary; this DEBUG line makes bench artifacts self-explaining
-    _log.debug(
-        "seen pre-filter probe path: %s (blob_bytes=%d, threshold=%d)",
-        "bucket-local cogroup" if total_bytes > max_broadcast_bytes else "driver-broadcast",
-        total_bytes,
-        max_broadcast_bytes,
-    )
-    if total_bytes > max_broadcast_bytes:
-        return _dedup_bucket_probe(cand, seen, blooms, n_buckets)
-
-    spark = candidates.sparkSession
-    cuckoo_kind = is_cuckoo_blobs(blooms)
-    if cuckoo_kind:
-        from gpse import cuckoo as _ck
-
-        blob_map = {
-            int(r["bucket"]): (
-                np.frombuffer(r["tbl"], dtype=np.uint16).reshape(
-                    int(r["nbuckets"]), _ck.SLOTS
-                ),
-                np.frombuffer(r["stash"], dtype=np.uint16),
-            )
-            for r in blooms.collect()
-        }
-    else:
-        blob_map = {
-            int(r["bucket"]): (
-                int(r["nbits"]),
-                int(r["nhashes"]),
-                np.frombuffer(r["bits"], dtype=np.uint8),
-            )
-            for r in blooms.collect()
-        }
-    bc = spark.sparkContext.broadcast(blob_map)
-
-    @pandas_udf(BooleanType())
-    def maybe_seen(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        if cuckoo_kind:
-            from gpse import cuckoo as ck
-        blobs = bc.value
-        for uh in it:
-            keys = uh.to_numpy(dtype=np.int64)
-            out = np.ones(len(keys), dtype=bool)
-            buckets = np.mod(keys, n_buckets)  # numpy mod == Spark pmod sign
-            for b in np.unique(buckets):
-                m = buckets == b
-                entry = blobs.get(int(b))
-                if entry is None:
-                    out[m] = False  # empty bucket filter → definitely new
-                elif cuckoo_kind:
-                    out[m] = ck.query(keys[m], entry[0], entry[1])
-                else:
-                    out[m] = _bloom_test(keys[m], entry[0], entry[1], entry[2])
-            yield pd.Series(out, dtype=bool)
-
-    c = cand.withColumn("_maybe", maybe_seen(F.col("url_hash")))
-    return _split_on_maybe(c, seen)
+    return cand.join(_seen_build(seen), "url_hash", "left_anti")
 
 
 def _seen_build(seen: DataFrame) -> DataFrame:
@@ -400,74 +307,3 @@ def _seen_build(seen: DataFrame) -> DataFrame:
     the candidates unsorted. Measured on the bench round's probe+anti
     stage; result set identical (join semantics unchanged)."""
     return seen.select("url_hash").hint("shuffle_hash")
-
-
-def _split_on_maybe(c: DataFrame, seen: DataFrame) -> DataFrame:
-    """definitely-new ∪ (maybe-seen ∖ seen_exact) — in ONE pass (r6).
-
-    The old form filtered `c` into two branches and unioned them, which
-    executed the whole candidate subtree (pages-delta scan → explode →
-    hash → min-agg → pre-filter probe) TWICE — measured as ~half the
-    'dedup + frontier commit' stage wall at every core count (guide
-    §1.2: don't compute things twice). The single left-outer join against
-    the marked seen build evaluates the subtree once; the filter keeps a
-    row iff the pre-filter said definitely-new OR the exact layer has no
-    match — exactly the old union's membership. (A definitely-new row
-    can never match seen_exact — the filters have no false negatives, a
-    property pinned in tests/unit/test_bloom.py — so row multiplicity is
-    unchanged too.) The seen build side and its SHUFFLE_HASH hint are
-    the same; the agg's url_hash partitioning still feeds the join with
-    no extra candidate exchange."""
-    marked = _seen_build(seen).withColumn("_in_seen", F.lit(True))
-    j = c.join(marked, "url_hash", "left")
-    return j.filter(~F.col("_maybe") | F.col("_in_seen").isNull()).drop(
-        "_maybe", "_in_seen"
-    )
-
-
-def _dedup_bucket_probe(
-    cand: DataFrame, seen: DataFrame, blooms: DataFrame, n_buckets: int
-) -> DataFrame:
-    """Bucket-local bloom probe (the 10^10-scale path promised in
-    SCALE.md): candidates cogroup with the blob table on the bucket key,
-    so each task probes its bucket's candidates against ONLY that
-    bucket's blob. No driver collect, no broadcast of the full blob set;
-    one shuffle of slim candidate rows keyed the same way the blobs are
-    built (pmod(url_hash, P))."""
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        list(cand.schema.fields) + [StructField("_maybe", BooleanType())]
-    )
-    cand_cols = list(cand.columns)
-    cand_b = cand.withColumn(
-        "_bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int")
-    )
-
-    def probe(key, cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        out = cdf[cand_cols].copy()
-        keys = cdf["url_hash"].to_numpy(dtype=np.int64)
-        maybe = np.zeros(len(keys), dtype=bool)
-        # several blob rows per bucket can exist mid-merge: a key is
-        # maybe-seen if ANY blob reports it (OR keeps zero false negatives)
-        if "tbl" in bdf.columns:  # cuckoo blobs
-            from gpse import cuckoo as ck
-
-            for _, r in bdf.iterrows():
-                tbl = np.frombuffer(r["tbl"], dtype=np.uint16).reshape(
-                    int(r["nbuckets"]), ck.SLOTS
-                )
-                maybe |= ck.query(keys, tbl, np.frombuffer(r["stash"], dtype=np.uint16))
-        else:
-            for _, r in bdf.iterrows():
-                bits = np.frombuffer(r["bits"], dtype=np.uint8)
-                maybe |= _bloom_test(keys, int(r["nbits"]), int(r["nhashes"]), bits)
-        out["_maybe"] = maybe
-        return out
-
-    probed = (
-        cand_b.groupBy("_bucket")
-        .cogroup(blooms.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-    )
-    return _split_on_maybe(probed, seen)

@@ -161,36 +161,51 @@ def warc_ts_us(page_ids: np.ndarray, cfg: CorpusCfg) -> np.ndarray:
     return (np.uint64(_BASE_EPOCH_US) + off * np.uint64(1_000_000)).astype(np.int64)
 
 
+def capture_rows(ids: np.ndarray, cfg: CorpusCfg) -> dict:
+    """The corpus rows for a page-id array: one capture per page, then
+    the ~5% of pages that get a second capture 45 days later (as-of-join
+    fodder), in id order. The one row rule behind gen_pages and the
+    `synthweb` data source. Returns columns page_id, host (id), url,
+    warc_ts_us, html and lang (per host)."""
+    ids = ids.astype(np.uint64)
+    hosts = host_of(ids, cfg)
+    urls = url_of(ids, cfg)
+    html = html_for(ids, cfg)
+    lang_of_host = mix64(hosts.astype(np.uint64), cfg.seed, 9) % np.uint64(4)
+    langs = [_LANGS[int(x)] for x in lang_of_host]
+    recrawl = (mix64(ids, cfg.seed, 8) % np.uint64(20)) == np.uint64(0)
+    rows = np.r_[np.arange(len(ids)), np.flatnonzero(recrawl)]
+    ts = warc_ts_us(ids, cfg)[rows]
+    ts[len(ids):] += 45 * 86400 * 1_000_000
+    return {
+        "page_id": ids.astype(np.int64)[rows],
+        "host": hosts[rows],
+        "url": [urls[i] for i in rows],
+        "warc_ts_us": ts,
+        "html": [html[i] for i in rows],
+        "lang": [langs[i] for i in rows],
+    }
+
+
 def gen_pages(spark: SparkSession, cfg: CorpusCfg, partitions: int = 32) -> DataFrame:
     """Distributed corpus build: pages table in the BASELINE.json input_hint
-    schema (url, warc_ts, html, text, lang). `text` is empty — the engine's
-    extractor fills it (byte-identical golden invariant). ~5%% of pages get
-    a second, later capture (as-of-join fodder)."""
+    schema (url, warc_ts, html, text, lang), rows from capture_rows. `text`
+    is empty — the engine's extractor fills it (byte-identical golden
+    invariant)."""
     cfg_b = cfg
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            ids = b["id"].to_numpy(dtype=np.uint64)
-            hosts = host_of(ids, cfg_b)
-            urls = url_of(ids, cfg_b)
-            ts = warc_ts_us(ids, cfg_b)
-            html = html_for(ids, cfg_b)
-            langs = [_LANGS[int(x)] for x in (mix64(hosts.astype(np.uint64), cfg_b.seed, 9) % np.uint64(4))]
-            pdf = pd.DataFrame(
+            rows = capture_rows(b["id"].to_numpy(dtype=np.uint64), cfg_b)
+            yield pd.DataFrame(
                 {
-                    "url": urls,
-                    "warc_ts": pd.to_datetime(ts, unit="us"),
-                    "html": html,
+                    "url": rows["url"],
+                    "warc_ts": pd.to_datetime(rows["warc_ts_us"], unit="us"),
+                    "html": rows["html"],
                     "text": "",
-                    "lang": langs,
+                    "lang": rows["lang"],
                 }
             )
-            recrawl = (mix64(ids, cfg_b.seed, 8) % np.uint64(20)) == np.uint64(0)
-            if recrawl.any():
-                dup = pdf[recrawl].copy()
-                dup["warc_ts"] = dup["warc_ts"] + pd.Timedelta(days=45)
-                pdf = pd.concat([pdf, dup], ignore_index=True)
-            yield pdf
 
     return (
         spark.range(0, cfg.n_pages, 1, partitions)

@@ -233,17 +233,6 @@ def test_discovery_attributes_partition_independent(spark):
     ]
 
 
-def test_bucket_local_bloom_probe_matches(spark, baseline, tmp_path):
-    """Force the bucket-local probe path (broadcast threshold 0) for a full
-    crawl: the seen set must be identical to the broadcast-probe baseline."""
-    cat_a, _ = baseline
-    cat_d = Catalog(str(tmp_path / "bucketprobe"))
-    cfg = _cfg(4)
-    cfg.bloom_broadcast_max_bytes = 0
-    crawl.run(spark, cat_d, cfg, 3)
-    assert _seen_set(spark, cat_a) == _seen_set(spark, cat_d)
-
-
 def test_parquet_origin_detects_unique_captures_once(spark, tmp_path, monkeypatch):
     """An undetected corpus_unique_captures is a property of the origin:
     a multi-round crawl over a parquet origin runs the detection job once,

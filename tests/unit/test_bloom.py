@@ -32,34 +32,3 @@ def test_empty_bloom_rejects_everything():
     bits = np.zeros(1024 // 8, dtype=np.uint8)
     keys = np.arange(1000, dtype=np.int64)
     assert not _bloom_test(keys, 1024, 6, bits).any()
-
-
-def test_bucket_probe_equals_broadcast_and_exact(spark):
-    """The bucket-local cogroup probe (blobs > max_broadcast_bytes) must
-    return exactly the same new-URL set as the broadcast probe and as the
-    bloom-less exact anti-join."""
-    from pyspark.sql import functions as F
-
-    from gpse.seen import build_blooms, dedup_new_urls
-
-    seen = spark.range(0, 3000).select(
-        F.xxhash64("id").alias("url_hash"), F.lit(0).cast("int").alias("first_round")
-    )
-    cand = spark.range(1500, 5000).select(
-        F.concat(F.lit("http://h/p/"), F.col("id")).alias("url"),
-        F.xxhash64("id").alias("url_hash"),
-        F.lit(1).cast("int").alias("depth"),
-        F.lit(0).cast("long").alias("src_url_hash"),
-    )
-    blooms = build_blooms(seen, n_buckets=8, nbits=1 << 16)
-    exact = {r.url_hash for r in dedup_new_urls(cand, seen).collect()}
-    bcast = {
-        r.url_hash
-        for r in dedup_new_urls(cand, seen, blooms, 8, max_broadcast_bytes=1 << 30).collect()
-    }
-    bucket = {
-        r.url_hash
-        for r in dedup_new_urls(cand, seen, blooms, 8, max_broadcast_bytes=0).collect()
-    }
-    assert exact == bcast == bucket
-    assert len(exact) == 2000

@@ -68,35 +68,6 @@ def test_merge_equals_joint_build_membership():
     assert cuckoo.query(both, tm, sm).all()
 
 
-def test_cuckoo_dedup_equals_bloom_and_exact(spark):
-    """dedup_new_urls over cuckoo blobs (broadcast AND bucket-local probe
-    paths) must return the same new-URL set as the bloom and exact paths."""
-    from pyspark.sql import functions as F
-
-    from gpse.seen import build_cuckoos, dedup_new_urls
-
-    seen = spark.range(0, 3000).select(
-        F.xxhash64("id").alias("url_hash"), F.lit(0).cast("int").alias("first_round")
-    )
-    cand = spark.range(1500, 5000).select(
-        F.concat(F.lit("http://h/p/"), F.col("id")).alias("url"),
-        F.xxhash64("id").alias("url_hash"),
-        F.lit(1).cast("int").alias("depth"),
-        F.lit(0).cast("long").alias("src_url_hash"),
-    )
-    blobs = build_cuckoos(seen, n_buckets=8, nb=1 << 12)
-    exact = {r.url_hash for r in dedup_new_urls(cand, seen).collect()}
-    bcast = {
-        r.url_hash
-        for r in dedup_new_urls(cand, seen, blobs, 8, max_broadcast_bytes=1 << 30).collect()
-    }
-    bucket = {
-        r.url_hash
-        for r in dedup_new_urls(cand, seen, blobs, 8, max_broadcast_bytes=0).collect()
-    }
-    assert exact == bcast == bucket
-
-
 def test_delete_then_merge_never_clobbers_survivors():
     """Regression (r3 review): delete used to zero a slot in place,
     leaving a hole; a later merge's packed-slot arithmetic wrote PAST the

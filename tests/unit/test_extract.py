@@ -95,23 +95,19 @@ def test_udtf_matches_extract_one(spark):
         assert [l for _, l in sorted(pairs)] == links
 
 
-def test_arrow_path_matches_pandas_path(spark):
-    """parse_extract (mapInArrow hot path) must produce byte-identical
-    text/links to parse_extract_pandas (the scalar-UDF reference form)."""
+def test_arrow_path_matches_extract_one(spark):
+    """parse_extract (the mapInArrow batch function) must produce, for
+    every row, exactly extract_one's text/links — extract_one is the
+    frozen spec the golden fixtures pin."""
     from gpse import synth
-    from gpse.extract import parse_extract, parse_extract_pandas
+    from gpse.extract import extract_one, parse_extract
 
     cfg = synth.CorpusCfg(n_pages=120, n_hosts=8, seed=42)
     pages = synth.gen_pages(spark, cfg, partitions=3).drop("text")
-    a = {
-        r["url"]: (r["text"], list(r["links"]))
-        for r in parse_extract(pages).select("url", "text", "links").collect()
-    }
-    b = {
-        r["url"]: (r["text"], list(r["links"]))
-        for r in parse_extract_pandas(pages).select("url", "text", "links").collect()
-    }
-    assert a == b
+    rows = parse_extract(pages).select("url", "html", "text", "links").collect()
+    assert rows
+    for r in rows:
+        assert (r["text"], list(r["links"])) == extract_one(r["html"], r["url"])
 
 
 def test_parse_extract_rejects_colliding_columns(spark):

@@ -184,6 +184,7 @@ def test_dedup_new_urls_single_candidate_exchange(spark):
     aggregate and the join — and the agg must run PARTIAL map-side (r6:
     the shuffle moves ~unique candidates, not every exploded link row)."""
     from gpse import seen as seen_mod
+    from gpse.crawl import CrawlCfg
 
     cand = (
         spark.range(0, 1000)
@@ -195,9 +196,25 @@ def test_dedup_new_urls_single_candidate_exchange(spark):
         )
     )
     seen = spark.range(0, 100).select(F.xxhash64(F.col("id")).alias("url_hash"))
-    p = plan_of(seen_mod.dedup_new_urls(cand, seen))
-    # exchanges: one for the candidate agg, one for the seen side — and
-    # none between the HashAggregate pair and the anti-join
-    n_exchanges = p.count("Exchange hashpartitioning")
-    assert n_exchanges <= 2, p
-    assert "partial_min" in p, p  # map-side combine before the exchange
+    # handed the seen pre-filter blobs the way perfbench's traced round
+    # still passes them, the dedup plan is the same: no filter probe
+    cfg = CrawlCfg()
+    blooms = seen_mod.build_filters(
+        seen, cfg.n_bloom_buckets, kind=cfg.seen_filter,
+        nbits=cfg.bloom_bits, cuckoo_nb=cfg.cuckoo_nbuckets,
+    )
+    for out in (
+        seen_mod.dedup_new_urls(cand, seen),
+        seen_mod.dedup_new_urls(
+            cand, seen, blooms, cfg.n_bloom_buckets, cfg.bloom_broadcast_max_bytes,
+            blob_bytes_hint=cfg.n_bloom_buckets * (cfg.bloom_bits // 8),
+        ),
+    ):
+        p = plan_of(out)
+        # exchanges: one for the candidate agg, one for the seen side — and
+        # none between the HashAggregate pair and the anti-join
+        n_exchanges = p.count("Exchange hashpartitioning")
+        assert n_exchanges <= 2, p
+        assert "partial_min" in p, p  # map-side combine before the exchange
+        assert "LeftAnti" in p, p
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
